@@ -26,6 +26,8 @@ collect. The ``d``-moments use count(d) = n−1 denominators; the
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -44,69 +46,101 @@ def with_diff(rr: DataFrame, record_col: str = "record_id",
     return rr.withColumn("d", F.col(rri_col) - F.lag(rri_col).over(w))
 
 
-def _stats(rri: Column, d: Column) -> dict[str, Column]:
+class _Lazy(dict):
+    """``name -> Column`` made on first lookup from ``recipes`` (name ->
+    zero-argument function), then reused. Every Column costs Py4J round
+    trips, so a caller that reads a few names pays only for those."""
+
+    def __init__(self, recipes: dict[str, Callable[[], Column]]):
+        super().__init__()
+        self._recipes = recipes
+
+    def __missing__(self, name: str) -> Column:
+        col = self[name] = self._recipes[name]()
+        return col
+
+
+def _stats(rri: Column, d: Column) -> _Lazy:
     """Shared exact-sum building blocks over one group.
 
     All denominators go through ``safe_div``: a single-beat group has
     n−1 = 0 and count(d) = 0, and ANSI mode turns that into a job-fatal
     DIVIDE_BY_ZERO (found by hypothesis); such groups get NULL moments.
     """
-    n = F.count(rri).cast("double")
-    nd = F.count(d).cast("double")
-    s1, s2 = dsum(rri), dsum(rri * rri)
-    sd1_, sd2_ = dsum(d), dsum(d * d)
-    hr = F.lit(60000.0) / rri
-    sh1, sh2 = dsum(hr), dsum(hr * hr)
+    s = _Lazy({
+        "n": lambda: F.count(rri).cast("double"),
+        "nd": lambda: F.count(d).cast("double"),
+        "sum_rri": lambda: dsum(rri),
+        "sum_rri2": lambda: dsum(rri * rri),
+        "sum_d": lambda: dsum(d),
+        "sum_d2": lambda: dsum(d * d),
+        "hr": lambda: F.lit(60000.0) / rri,
+        "sum_hr": lambda: dsum(s["hr"]),
+        "sum_hr2": lambda: dsum(s["hr"] * s["hr"]),
+        "mean_nni": lambda: safe_div(s["sum_rri"], s["n"]),
+        "var_nni": lambda: safe_div(
+            s["sum_rri2"] - safe_div(s["sum_rri"] * s["sum_rri"], s["n"]),
+            s["n"] - 1),
+        "mean_d2": lambda: safe_div(s["sum_d2"], s["nd"]),
+        "var_d": lambda: safe_div(
+            s["sum_d2"] - safe_div(s["sum_d"] * s["sum_d"], s["nd"]),
+            s["nd"] - 1),
+        "var_d_pop": lambda: safe_div(
+            s["sum_d2"] - safe_div(s["sum_d"] * s["sum_d"], s["nd"]),
+            s["nd"]),
+        "mean_hr": lambda: safe_div(s["sum_hr"], s["n"]),
+        "var_hr_pop": lambda: safe_div(
+            s["sum_hr2"] - safe_div(s["sum_hr"] * s["sum_hr"], s["n"]),
+            s["n"]),
+        # time-domain intermediates shared by two features each
+        "sdnn": lambda: safe_sqrt(s["var_nni"]),
+        "rmssd": lambda: F.sqrt(s["mean_d2"]),
+        "nni_50": lambda: F.sum(F.when(F.abs(d) > 50, 1).otherwise(0)),
+        "nni_20": lambda: F.sum(F.when(F.abs(d) > 20, 1).otherwise(0)),
+    })
+    return s
+
+
+def _time_domain(rri_col: str, d_col: str) -> dict[str, Callable[[], Column]]:
+    """Zero-argument Column maker per time-domain feature, in output
+    order."""
+    rri, d = F.col(rri_col), F.col(d_col)
+    s = _stats(rri, d)
     return {
-        "n": n, "nd": nd,
-        "mean_nni": safe_div(s1, n),
-        "var_nni": safe_div(s2 - safe_div(s1 * s1, n), n - 1),
-        "mean_d2": safe_div(sd2_, nd),
-        "var_d": safe_div(sd2_ - safe_div(sd1_ * sd1_, nd), nd - 1),
-        "var_d_pop": safe_div(sd2_ - safe_div(sd1_ * sd1_, nd), nd),
-        "mean_hr": safe_div(sh1, n),
-        "var_hr": safe_div(sh2 - safe_div(sh1 * sh1, n), n - 1),
-        "var_hr_pop": safe_div(sh2 - safe_div(sh1 * sh1, n), n),
+        "mean_nni": lambda: r6(s["mean_nni"]),
+        "sdnn": lambda: r6(s["sdnn"]),
+        "sdsd": lambda: r6(safe_sqrt(s["var_d_pop"])),
+        "rmssd": lambda: r6(s["rmssd"]),
+        "median_nni": lambda: r6(F.expr(f"percentile({rri_col}, 0.5)")),
+        "range_nni": lambda: F.max(rri) - F.min(rri),
+        "cvsd": lambda: r6(safe_div(s["rmssd"], s["mean_nni"])),
+        "cvnni": lambda: r6(safe_div(s["sdnn"], s["mean_nni"])),
+        "nni_50": lambda: s["nni_50"],
+        "pnni_50": lambda: r6(safe_div(F.lit(100.0) * s["nni_50"], s["n"])),
+        "nni_20": lambda: s["nni_20"],
+        "pnni_20": lambda: r6(safe_div(F.lit(100.0) * s["nni_20"], s["n"])),
+        "mean_hr": lambda: r6(s["mean_hr"]),
+        "max_hr": lambda: r6(F.lit(60000.0) / F.min(rri)),
+        "min_hr": lambda: r6(F.lit(60000.0) / F.max(rri)),
+        "std_hr": lambda: r6(safe_sqrt(s["var_hr_pop"])),
     }
 
 
 def time_domain_exprs(rri_col: str = "rri", d_col: str = "d") -> list[Column]:
-    rri, d = F.col(rri_col), F.col(d_col)
-    s = _stats(rri, d)
-    sdnn = safe_sqrt(s["var_nni"])
-    rmssd = F.sqrt(s["mean_d2"])
-    nni_50 = F.sum(F.when(F.abs(d) > 50, 1).otherwise(0))
-    nni_20 = F.sum(F.when(F.abs(d) > 20, 1).otherwise(0))
-    return [
-        r6(s["mean_nni"]).alias("mean_nni"),
-        r6(sdnn).alias("sdnn"),
-        r6(safe_sqrt(s["var_d_pop"])).alias("sdsd"),
-        r6(rmssd).alias("rmssd"),
-        r6(F.expr(f"percentile({rri_col}, 0.5)")).alias("median_nni"),
-        (F.max(rri) - F.min(rri)).alias("range_nni"),
-        r6(safe_div(rmssd, s["mean_nni"])).alias("cvsd"),
-        r6(safe_div(sdnn, s["mean_nni"])).alias("cvnni"),
-        nni_50.alias("nni_50"),
-        r6(safe_div(F.lit(100.0) * nni_50, s["n"])).alias("pnni_50"),
-        nni_20.alias("nni_20"),
-        r6(safe_div(F.lit(100.0) * nni_20, s["n"])).alias("pnni_20"),
-        r6(s["mean_hr"]).alias("mean_hr"),
-        r6(F.lit(60000.0) / F.min(rri)).alias("max_hr"),
-        r6(F.lit(60000.0) / F.max(rri)).alias("min_hr"),
-        r6(safe_sqrt(s["var_hr_pop"])).alias("std_hr"),
-    ]
+    return [make().alias(name)
+            for name, make in _time_domain(rri_col, d_col).items()]
 
 
 def time_domain_exprs_by_name(names: list[str], rri_col: str = "rri",
                               d_col: str = "d") -> list[Column]:
-    """Named subset of the time-domain feature expressions (each Column
-    is aliased to its feature name, so selection is by alias)."""
-    wanted = set(names)
-    out = [e for e in time_domain_exprs(rri_col, d_col)
-           if e._jc.toString().rsplit(" AS ", 1)[-1].strip("`") in wanted]
-    if len(out) != len(wanted):
+    """Named subset of the time-domain feature expressions, aliased to
+    their names and in ``time_domain_exprs`` order (not ``names``
+    order). Only the requested expressions are built."""
+    makers = _time_domain(rri_col, d_col)
+    if not set(names) <= makers.keys():
         raise KeyError(f"unknown feature name in {names!r}")
-    return out
+    return [make().alias(name) for name, make in makers.items()
+            if name in names]
 
 
 def poincare_exprs(rri_col: str = "rri", d_col: str = "d") -> list[Column]:

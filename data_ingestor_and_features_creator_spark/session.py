@@ -12,6 +12,14 @@ setting is chosen to also be the right *shape* at cluster scale:
   blow executor memory on wide rows (SURVEY.md §4).
 - Session timezone pinned to UTC: parquet fixture timestamps are naive;
   the DuckDB oracle is UTC-naive (pyspark_guide.md "Pitfalls").
+- Generated-code cache sized to the working set it must hold. One pass
+  of the text-dedup pair (``dedup_minhash_cluster`` +
+  ``llm_prep_pipeline_full``) needs ~173 generated classes; Spark's
+  default LRU of 100 evicted each one before the next pass asked for it,
+  so every warm pass recompiled ~169 classes (Janino, then the JIT
+  again). The setting is static: only the first session in a JVM gets
+  it. At cluster scale each executor JVM holds its own cache, sized by
+  the same conf.
 """
 
 from __future__ import annotations
@@ -76,6 +84,22 @@ def get_spark(app_name: str = "data_ingestor_and_features_creator_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
                 str(64 * 1024 * 1024))
+        # CODEGEN CACHE: Spark keeps generated classes in an LRU keyed by
+        # their source (default 100 entries); a miss costs a Janino
+        # compile (5-8 ms mean on a 4-core VM) plus JIT work on the new
+        # class. Distinct classes, measured with an unbounded cache
+        # (tools/qbench.py prints compiles per run): one text-dedup pass
+        # ~173; the 19 bench.py headline ids 10-62 each, 564 together;
+        # the largest test module (test_oracle_parity) 7038. A warm
+        # text-dedup pass compiled ~169 classes at 100 and 4-14 at 250 or
+        # 1000; those 4-14 have new source every pass (fresh limit-counter
+        # names, stage ids numbered in AQE's planning order), so no size
+        # removes them. test_oracle_parity compiled 10802 times at 100,
+        # 8622 at 500, 8062 at 1000. 1000 holds the whole headline set
+        # with ~1.8x headroom. Static conf: only the first session in a
+        # JVM gets it; on a cluster every executor JVM has its own cache
+        # of this size.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # GC / JVM flags for A/B experiments (round 11: the ±25% concurrent-
     # throughput spread is G1 roulette on the shared 48 GB heap; this is
@@ -87,3 +111,12 @@ def get_spark(app_name: str = "data_ingestor_and_features_creator_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations so far in this session's JVM (Spark's
+    ``CodegenMetrics``): one per generated class that missed the codegen
+    cache. In local mode the tasks run in the same JVM, so their
+    compiles are counted too."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -5,6 +5,7 @@ thresholds) that the DuckDB oracle alone cannot distinguish."""
 from __future__ import annotations
 
 import datetime
+import hashlib
 import math
 
 import numpy as np
@@ -13,8 +14,8 @@ import pytest
 
 from data_ingestor_and_features_creator_spark.features import kernels
 from data_ingestor_and_features_creator_spark.features.hrv import (
-    csi_cvi_exprs, poincare_exprs, time_domain_exprs, triangular_index,
-    with_diff)
+    csi_cvi_exprs, poincare_exprs, time_domain_exprs,
+    time_domain_exprs_by_name, triangular_index, with_diff)
 from data_ingestor_and_features_creator_spark.schemas import RR_INTERVALS
 
 
@@ -97,7 +98,7 @@ def test_sliding_windows_fanout_and_within_window_diff(spark):
     windows starting 11:15/11:30/11:45/12:00 (1 h width, 15 min
     stride), and the diff is computed inside each window."""
     from data_ingestor_and_features_creator_spark.features.hrv import (
-        sliding_windows, time_domain_exprs_by_name)
+        sliding_windows)
     base = datetime.datetime(2024, 1, 1, 12, 0, 0)
     df = spark.createDataFrame(
         [(1, base, 800.0), (1, base + datetime.timedelta(minutes=1), 810.0)],
@@ -113,6 +114,48 @@ def test_sliding_windows_fanout_and_within_window_diff(spark):
     for r in out:
         assert r["mean_nni"] == pytest.approx(805.0)
         assert r["rmssd"] == pytest.approx(10.0)  # diff within window
+
+
+def _expr_strs(cols) -> list[str]:
+    return [c._jc.toString() for c in cols]
+
+
+# sha256 of each feature list's expression strings, newline-joined, as
+# the eager implementation produced them before the time-domain
+# expressions were made lazily: laziness must not change a single one.
+_EXPR_DIGESTS = {
+    "time_domain": "803acd5d64592fecec7116b95f6e18664b368908008f503240b440e1a5f419e5",
+    "poincare": "ae905a34288966cf299290a2f9226d968bf27db68aa7745368d28e984b9fc363",
+    "csi_cvi": "c381c154b708a03421c2296eecfe9797bd63d7f1c8bba82d84cd7afe5ade444e",
+}
+
+
+def test_feature_expressions_unchanged(spark):
+    got = {name: hashlib.sha256("\n".join(_expr_strs(f())).encode()).hexdigest()
+           for name, f in (("time_domain", time_domain_exprs),
+                           ("poincare", poincare_exprs),
+                           ("csi_cvi", csi_cvi_exprs))}
+    assert got == _EXPR_DIGESTS
+
+
+@pytest.mark.parametrize("names", [
+    ["mean_nni", "sdnn", "rmssd", "nni_50"],   # q_hrv, q_media
+    ["mean_nni", "sdnn", "rmssd", "pnni_50"],  # q_round5
+    ["mean_nni", "rmssd"],
+    ["std_hr", "mean_nni", "cvsd"],            # not in output order
+], ids="+".join)
+def test_time_domain_by_name_matches_full_list(spark, names):
+    """Building only the named expressions gives exactly the strings of
+    the full list filtered by alias, in ``time_domain_exprs`` order."""
+    full = _expr_strs(time_domain_exprs())
+    expect = [e for e in full if e.rsplit(" AS ", 1)[-1].strip("`") in names]
+    assert len(expect) == len(names)
+    assert _expr_strs(time_domain_exprs_by_name(names)) == expect
+
+
+def test_time_domain_by_name_rejects_unknown(spark):
+    with pytest.raises(KeyError):
+        time_domain_exprs_by_name(["mean_nni", "no_such_feature"])
 
 
 def test_freq_domain_kernel_detects_lf_modulation():

@@ -7,7 +7,10 @@ Usage:
   python tools/qbench.py [--sf DIR] [--reps N] [--plan OUTDIR] [--suffix S] id [id...]
 
 For each id: builds the plan, one warm noop run, then N timed noop runs
-(prints each + min). With --plan, writes OUTDIR/<id>_<suffix>.txt with
+(prints each + min). Next to each time it prints how many classes Spark
+compiled during that run (Janino compilations, i.e. codegen cache
+misses): a warm rep that still compiles means the id's working set does
+not fit the codegen cache. With --plan, writes OUTDIR/<id>_<suffix>.txt with
 the .explain("formatted") output of the freshly built DataFrame.
 """
 
@@ -21,7 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_ingestor_and_features_creator_spark import plans
-from data_ingestor_and_features_creator_spark.session import get_spark
+from data_ingestor_and_features_creator_spark.session import (
+    codegen_compiles, get_spark)
 
 
 def main() -> int:
@@ -48,17 +52,20 @@ def main() -> int:
                       "w") as fh:
                 fh.write(txt)
             spark.catalog.clearCache()
-        t0 = time.perf_counter()
+        c0, t0 = codegen_compiles(spark), time.perf_counter()
         fn(spark, a.sf).write.format("noop").mode("overwrite").save()
         warm = time.perf_counter() - t0
-        times = []
+        warm_compiles = codegen_compiles(spark) - c0
+        times, compiles = [], []
         for _ in range(a.reps):
             if a.cold:
                 spark.catalog.clearCache()
-            t0 = time.perf_counter()
+            c0, t0 = codegen_compiles(spark), time.perf_counter()
             fn(spark, a.sf).write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - t0, 3))
-        print(f"{name}: cold={warm:.3f} reps={times} min={min(times):.3f}",
+            compiles.append(codegen_compiles(spark) - c0)
+        print(f"{name}: cold={warm:.3f} compiles={warm_compiles} "
+              f"reps={times} rep_compiles={compiles} min={min(times):.3f}",
               flush=True)
         spark.catalog.clearCache()
     spark.stop()
