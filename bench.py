@@ -3,9 +3,9 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line (driver contract).
 
-Each query is materialized with the no-op sink (full execution, no
-driver collect) — wall-clock measures the whole plan, including shuffle
-and Python-UDF stages.
+Each query is timed by harness.measure: materialized with the no-op
+sink (full execution, no driver collect), so wall-clock measures the
+whole plan, including shuffle and Python-UDF stages.
 """
 
 from __future__ import annotations
@@ -14,11 +14,12 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_ingestor_and_features_creator_spark import plans  # noqa: E402
+from data_ingestor_and_features_creator_spark.harness import (  # noqa: E402
+    measure, tpch_ids)
 from data_ingestor_and_features_creator_spark.session import get_spark  # noqa: E402
 
 # One representative per category (SURVEY.md §6): scan-agg, join-heavy,
@@ -211,48 +212,19 @@ def main() -> None:
         load_at_start = None
     spark = get_spark("bench")
     qs = plans.queries()
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        if name not in qs:
-            continue
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm (JIT, page cache)
-        # best-of-3 timed runs: machine contention and JVM GC spikes
-        # inflate single samples 2-5x run-to-run (observed: the sliding
-        # HRV plan swings 1.1-5.7 s on consecutive quiet-machine runs);
-        # min is the stable estimator of the plan's actual cost
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-        # Cache lifecycle (round 12, VERDICT r11 item 3): release every
-        # block the query pinned BETWEEN queries, outside the timed
-        # region — the r11 sweep measured 3-6x inflation on late
-        # queries from never-unpersisted caches accumulating across a
-        # long-lived session. Within one query's best-of-3 the caches
-        # stay warm exactly as before, so per-query numbers remain
-        # comparable with earlier rounds.
-        spark.catalog.clearCache()
+    # One first run, then min of 3 per id; caches released between ids
+    # (harness.measure). A HEADLINE id missing from the registry raises
+    # KeyError here rather than silently lowering the total.
+    timings = {name: round(measure(spark, qs[name], sf_dir, 3).best, 3)
+               for name in HEADLINE}
     total = round(sum(timings.values()), 3)
     # Round 5 (VERDICT r4 item 6): the 22-query TPC-H power total rides
     # along as a committed metric so SQL-suite regressions are visible
     # round-over-round, not just in BASELINE.md prose. One untimed
-    # warmup + min-of-2 per query keeps the added wall bounded (~2×
+    # first run + min-of-2 per query keeps the added wall bounded (~2×
     # the quiet power-run total).
-    tpch_ids = sorted((n for n in qs if n.startswith("sql_tpch_q")),
-                      key=lambda n: int(n.rsplit("q", 1)[1]))
-    tpch: dict[str, float] = {}
-    for name in tpch_ids:
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        tpch[name] = round(best, 3)
-        spark.catalog.clearCache()  # see the headline-loop comment
+    tpch = {name: round(measure(spark, qs[name], sf_dir, 2).best, 3)
+            for name in tpch_ids(qs)}
     # loadavg rides along (VERDICT r6 ask 9) so a judge can mechanically
     # distinguish external machine load from a code regression — the
     # documented same-code noise band on this box is 14-37 s under load.

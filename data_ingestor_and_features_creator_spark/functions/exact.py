@@ -174,6 +174,22 @@ def r6(col: Column) -> Column:
     return F.round(col, 6) + F.lit(0.0)
 
 
+def ln9(col: Column) -> Column:
+    """ln pinned to 9 dp — the cross-engine-stable log primitive. libm
+    ln() drifts 1 ulp between engines; rounded to 9 dp that drift only
+    matters if it straddles a 9-dp boundary (measure-zero), and every
+    later fold runs on the pinned values (plans/q_round6d docstring)."""
+    return F.round(F.log(col), 9)
+
+
+def dsum_raw(col: Column) -> Column:
+    """Exact DECIMAL(38,12) sum returned as double, WITHOUT dsum's
+    NaN≡missing guard: a NaN row nulls in Spark's cast and faults
+    DuckDB's. For callers whose plan keeps the input NaN-free; their
+    plans and oracle SQL predate the guard and keep its absence."""
+    return F.sum(col.cast(DEC)).cast("double")
+
+
 def safe_sqrt(x: Column) -> Column:
     """NULL-on-negative square root. Variances assembled from exact
     sums can cancel to ~-1e-17 for near-constant groups, and the sd2
@@ -203,6 +219,11 @@ def _nn_sql(expr: str) -> str:
 def dsum_sql(expr: str) -> str:
     return (f"CAST(SUM(CAST(({_nn_sql(expr)}) AS DECIMAL(38,12)))"
             f" AS DOUBLE)")
+
+
+def dsum_raw_sql(expr: str) -> str:
+    """DuckDB twin of dsum_raw (no NaN guard)."""
+    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,12))) AS DOUBLE)"
 
 
 def dcount_sql(expr: str) -> str:
@@ -263,6 +284,11 @@ def r6_sql(expr: str) -> str:
     """DuckDB twin of r6 — same signed-zero normalization (−0.0 + 0.0
     = +0.0; every other value, incl. NULL/NaN, passes through)."""
     return f"(ROUND(({expr}), 6) + 0.0)"
+
+
+def ln9_sql(expr: str) -> str:
+    """DuckDB twin of ln9."""
+    return f"ROUND(ln({expr}), 9)"
 
 
 def safe_sqrt_sql(expr: str) -> str:

@@ -277,4 +277,8 @@ def connected_components(edges: DataFrame, a_col: str = "a",
         if prev_sum is not None and new_sum == prev_sum:
             break
         prev_sum = new_sum
+    # Every round's labels are eagerly checkpointed, so nothing reads
+    # sym once the loop ends: release it rather than leave it pinned in
+    # the caller's session.
+    sym.unpersist()
     return labels.select(F.col("n"), F.col("lbl").alias("cluster_id"))

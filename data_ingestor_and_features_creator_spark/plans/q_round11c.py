@@ -29,7 +29,6 @@ from ..functions.exact import dsum, dsum_sql, r6, r6_sql, safe_div, \
     safe_div_sql, safe_sqrt, safe_sqrt_sql
 from .registry import query
 
-_DEC = "decimal(38,12)"
 
 # Shared two-sample construction (agg_mannwhitney_u convention):
 # sample X = 'click' events, sample Y = everything else, NaN≡missing.

@@ -28,27 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import dsum_raw, dsum_raw_sql, ln9, ln9_sql
 from ..operators import textops
 from .registry import query
-
-_DEC = "decimal(38,12)"
-
-
-def _ln9(col):
-    """ln pinned to 9 dp — the cross-engine-stable log primitive."""
-    return F.round(F.log(col), 9)
-
-
-def _ln9_sql(expr: str) -> str:
-    return f"ROUND(ln({expr}), 9)"
-
-
-def _dsum_sql(expr: str) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,12))) AS DOUBLE)"
-
-
-def _ds(col):
-    return F.sum(col.cast(_DEC)).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -65,12 +47,12 @@ n AS (
   FROM c GROUP BY user_id),
 h AS (
   SELECT c.user_id, n.n, n.k,
-         {_dsum_sql(f"-(CAST(c.c AS DOUBLE) / n.n) * "
-                    f"{_ln9_sql('CAST(c.c AS DOUBLE) / n.n')}")} AS entropy
+         {dsum_raw_sql(f"-(CAST(c.c AS DOUBLE) / n.n) * "
+                       f"{ln9_sql('CAST(c.c AS DOUBLE) / n.n')}")} AS entropy
   FROM c JOIN n ON c.user_id = n.user_id
   GROUP BY c.user_id, n.n, n.k)
 SELECT user_id, n, k, ROUND(entropy, 6) AS entropy_nats,
-       CASE WHEN k > 1 THEN ROUND(entropy / {_ln9_sql('CAST(k AS DOUBLE)')}, 6)
+       CASE WHEN k > 1 THEN ROUND(entropy / {ln9_sql('CAST(k AS DOUBLE)')}, 6)
        END AS evenness
 FROM h
 """)
@@ -93,10 +75,10 @@ def agg_shannon_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("c").cast("double") / F.col("n")
     h = (c.join(n, "user_id")
           .groupBy("user_id", "n", "k")
-          .agg(_ds(-p * _ln9(p)).alias("entropy")))
+          .agg(dsum_raw(-p * ln9(p)).alias("entropy")))
     even = F.when(F.col("k") > 1,
                   F.round(F.col("entropy")
-                          / _ln9(F.col("k").cast("double")), 6))
+                          / ln9(F.col("k").cast("double")), 6))
     return h.select("user_id", "n", "k",
                     F.round("entropy", 6).alias("entropy_nats"),
                     even.alias("evenness"))
@@ -125,8 +107,8 @@ SELECT c.event_type, c.cp - 1 AS n_recent, c.cq - 1 AS n_prior,
        ROUND(CAST(c.cp AS DOUBLE) / t.tp, 6) AS p,
        ROUND(CAST(c.cq AS DOUBLE) / t.tq, 6) AS q,
        ROUND((CAST(c.cp AS DOUBLE) / t.tp)
-             * ({_ln9_sql('CAST(c.cp AS DOUBLE) / t.tp')}
-                - {_ln9_sql('CAST(c.cq AS DOUBLE) / t.tq')}), 6)
+             * ({ln9_sql('CAST(c.cp AS DOUBLE) / t.tp')}
+                - {ln9_sql('CAST(c.cq AS DOUBLE) / t.tq')}), 6)
          AS kl_contrib
 FROM c CROSS JOIN t
 """)
@@ -168,7 +150,7 @@ def agg_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (F.col("cq") - 1).alias("n_prior"),
                      F.round(p, 6).alias("p"),
                      F.round(q, 6).alias("q"),
-                     F.round(p * (_ln9(p) - _ln9(q)), 6)
+                     F.round(p * (ln9(p) - ln9(q)), 6)
                       .alias("kl_contrib")))
 
 
@@ -186,14 +168,14 @@ mx AS (SELECT x, CAST(SUM(cxy) AS BIGINT) AS cx FROM xy GROUP BY x),
 my AS (SELECT y, CAST(SUM(cxy) AS BIGINT) AS cy FROM xy GROUP BY y),
 n AS (SELECT CAST(SUM(cxy) AS BIGINT) AS n FROM xy),
 mi AS (
-  SELECT {_dsum_sql(
+  SELECT {dsum_raw_sql(
       f"(CAST(cxy AS DOUBLE) / n.n) * "
-      f"({_ln9_sql('CAST(cxy AS DOUBLE) / n.n')}"
-      f" - {_ln9_sql('CAST(cx AS DOUBLE) / n.n')}"
-      f" - {_ln9_sql('CAST(cy AS DOUBLE) / n.n')})")} AS mi,
-         {_dsum_sql(
+      f"({ln9_sql('CAST(cxy AS DOUBLE) / n.n')}"
+      f" - {ln9_sql('CAST(cx AS DOUBLE) / n.n')}"
+      f" - {ln9_sql('CAST(cy AS DOUBLE) / n.n')})")} AS mi,
+         {dsum_raw_sql(
       f"-(CAST(cxy AS DOUBLE) / n.n) * "
-      f"{_ln9_sql('CAST(cxy AS DOUBLE) / n.n')}")} AS hxy
+      f"{ln9_sql('CAST(cxy AS DOUBLE) / n.n')}")} AS hxy
   FROM xy JOIN mx ON xy.x = mx.x JOIN my ON xy.y = my.y CROSS JOIN n)
 SELECT ROUND(mi, 6) AS mi_nats, ROUND(hxy, 6) AS joint_entropy,
        ROUND(mi / hxy, 6) AS normalized_mi
@@ -222,8 +204,8 @@ def stat_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     pxy = F.col("cxy").cast("double") / F.col("n")
     px = F.col("cx").cast("double") / F.col("n")
     py = F.col("cy").cast("double") / F.col("n")
-    mi = j.agg(_ds(pxy * (_ln9(pxy) - _ln9(px) - _ln9(py))).alias("mi"),
-               _ds(-pxy * _ln9(pxy)).alias("hxy"))
+    mi = j.agg(dsum_raw(pxy * (ln9(pxy) - ln9(px) - ln9(py))).alias("mi"),
+               dsum_raw(-pxy * ln9(pxy)).alias("hxy"))
     return mi.select(F.round("mi", 6).alias("mi_nats"),
                      F.round("hxy", 6).alias("joint_entropy"),
                      F.round(F.col("mi") / F.col("hxy"), 6)
@@ -249,12 +231,12 @@ ranked AS (
 top AS (SELECT * FROM ranked WHERE r <= {_ZIPF_TOP}),
 s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         {_dsum_sql(_ln9_sql('CAST(r AS DOUBLE)'))} AS sx,
-         {_dsum_sql(_ln9_sql('CAST(cnt AS DOUBLE)'))} AS sy,
-         {_dsum_sql(f"{_ln9_sql('CAST(r AS DOUBLE)')} * "
-                    f"{_ln9_sql('CAST(cnt AS DOUBLE)')}")} AS sxy,
-         {_dsum_sql(f"{_ln9_sql('CAST(r AS DOUBLE)')} * "
-                    f"{_ln9_sql('CAST(r AS DOUBLE)')}")} AS sxx
+         {dsum_raw_sql(ln9_sql('CAST(r AS DOUBLE)'))} AS sx,
+         {dsum_raw_sql(ln9_sql('CAST(cnt AS DOUBLE)'))} AS sy,
+         {dsum_raw_sql(f"{ln9_sql('CAST(r AS DOUBLE)')} * "
+                       f"{ln9_sql('CAST(cnt AS DOUBLE)')}")} AS sxy,
+         {dsum_raw_sql(f"{ln9_sql('CAST(r AS DOUBLE)')} * "
+                       f"{ln9_sql('CAST(r AS DOUBLE)')}")} AS sxx
   FROM top)
 SELECT n,
        ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope,
@@ -281,11 +263,11 @@ def vocab_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.orderBy(F.desc("cnt"), F.col("term"))
     top = (tc.withColumn("r", F.row_number().over(w))
              .filter(F.col("r") <= _ZIPF_TOP))
-    lx = _ln9(F.col("r").cast("double"))
-    ly = _ln9(F.col("cnt").cast("double"))
+    lx = ln9(F.col("r").cast("double"))
+    ly = ln9(F.col("cnt").cast("double"))
     s = top.agg(F.count(F.lit(1)).alias("n"),
-                _ds(lx).alias("sx"), _ds(ly).alias("sy"),
-                _ds(lx * ly).alias("sxy"), _ds(lx * lx).alias("sxx"))
+                dsum_raw(lx).alias("sx"), dsum_raw(ly).alias("sy"),
+                dsum_raw(lx * ly).alias("sxy"), dsum_raw(lx * lx).alias("sxx"))
     slope = ((F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
              / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")))
     intercept = (F.col("sy") - F.col("sx") * slope) / F.col("n")
@@ -305,11 +287,11 @@ vocab AS (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS c FROM tok2 GROUP BY term),
 total AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM vocab),
 lp AS (
-  SELECT term, {_ln9_sql('CAST(c AS DOUBLE) / t.t')} AS lp
+  SELECT term, {ln9_sql('CAST(c AS DOUBLE) / t.t')} AS lp
   FROM vocab CROSS JOIN total t),
 scored AS (
   SELECT tok2.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         {_dsum_sql('lp.lp')} AS slp
+         {dsum_raw_sql('lp.lp')} AS slp
   FROM tok2 JOIN lp ON tok2.term = lp.term
   GROUP BY tok2.doc_id)
 SELECT doc_id, n_tokens,
@@ -342,12 +324,12 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = vocab.agg(F.sum("c").cast("bigint").alias("t"))
     lp = (vocab.crossJoin(F.broadcast(total))
                .select("term",
-                       _ln9(F.col("c").cast("double") / F.col("t"))
+                       ln9(F.col("c").cast("double") / F.col("t"))
                        .alias("lp")))
     scored = (tok.join(F.broadcast(lp), "term")
                  .groupBy("doc_id")
                  .agg(F.count(F.lit(1)).alias("n_tokens"),
-                      _ds(F.col("lp")).alias("slp")))
+                      dsum_raw(F.col("lp")).alias("slp")))
     mean_lp = F.col("slp") / F.col("n_tokens")
     return scored.select("doc_id", "n_tokens",
                          F.round(mean_lp, 6).alias("mean_logprob"),

@@ -17,23 +17,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import DEC, dsum_raw, dsum_raw_sql
 from ..operators import textops
 from .registry import query, scratch_dir
 
-_DEC = "decimal(38,12)"
 
 # Small fixed stopword list shared verbatim by both engines (RAKE
 # delimiters). Lowercase; the corpus text is matched lowercased.
 _RAKE_STOPS = ("the a an and or of to in on for with is are was were be "
                "this that it as at by from").split()
-
-
-def _ds(col):
-    return F.sum(col.cast(_DEC)).cast("double")
-
-
-def _dsum_sql(expr: str) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,12))) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +68,7 @@ wstats AS (
 phrases AS (
   SELECT pw.doc_id, pw.phrase_id,
          string_agg(pw.w, ' ' ORDER BY pw.pos) AS phrase,
-         {_dsum_sql('CAST(ws.degree AS DOUBLE) / ws.freq')} AS score
+         {dsum_raw_sql('CAST(ws.degree AS DOUBLE) / ws.freq')} AS score
   FROM phrase_words pw JOIN wstats ws ON pw.w = ws.w
   GROUP BY pw.doc_id, pw.phrase_id),
 agg AS (
@@ -129,7 +121,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                           " ", F.array_sort(F.collect_list(
                               F.struct("pos", "w"))).getField("w"))
                       .alias("phrase"),
-                      _ds(score_w).alias("score")))
+                      dsum_raw(score_w).alias("score")))
     agg = (phrases.groupBy("phrase")
                   .agg(F.count(F.lit(1)).alias("n_occur"),
                        F.round(F.max("score"), 6).alias("score")))
@@ -208,11 +200,11 @@ pairs AS ({' UNION ALL '.join(_acf_branch_sql(k) for k in _ACF_LAGS)}),
 s AS (
   SELECT user_id, lag,
          CAST(COUNT(y) AS DOUBLE) AS n,
-         {_dsum_sql('CASE WHEN y IS NOT NULL THEN x END')} AS sx,
-         {_dsum_sql('y')} AS sy,
-         {_dsum_sql('CASE WHEN y IS NOT NULL THEN x * x END')} AS sxx,
-         {_dsum_sql('y * y')} AS syy,
-         {_dsum_sql('x * y')} AS sxy
+         {dsum_raw_sql('CASE WHEN y IS NOT NULL THEN x END')} AS sx,
+         {dsum_raw_sql('y')} AS sy,
+         {dsum_raw_sql('CASE WHEN y IS NOT NULL THEN x * x END')} AS sxx,
+         {dsum_raw_sql('y * y')} AS syy,
+         {dsum_raw_sql('x * y')} AS sxy
   FROM pairs GROUP BY user_id, lag)
 SELECT user_id, CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n,
        CASE WHEN n >= 3 AND (n * sxx - sx * sx) > 0
@@ -251,10 +243,10 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     xm = F.when(F.col("y").isNotNull(), F.col("x"))
     s = pairs.groupBy("user_id", "lag").agg(
         F.count("y").cast("double").alias("n"),
-        _ds(xm).alias("sx"), _ds(F.col("y")).alias("sy"),
-        _ds(xm * xm).alias("sxx"),
-        _ds(F.col("y") * F.col("y")).alias("syy"),
-        _ds(F.col("x") * F.col("y")).alias("sxy"))
+        dsum_raw(xm).alias("sx"), dsum_raw(F.col("y")).alias("sy"),
+        dsum_raw(xm * xm).alias("sxx"),
+        dsum_raw(F.col("y") * F.col("y")).alias("syy"),
+        dsum_raw(F.col("x") * F.col("y")).alias("sxy"))
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -271,7 +263,7 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("sink_compressed_codecs", oracle=f"""
 SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-       {_dsum_sql('value')} AS total_value
+       {dsum_raw_sql('value')} AS total_value
 FROM events WHERE value IS NOT NULL AND NOT isnan(value)
 GROUP BY event_type
 """)
@@ -305,7 +297,7 @@ def sink_compressed_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(*outs)
     return (back.groupBy("event_type")
                 .agg((F.count(F.lit(1)) / 3).cast("bigint").alias("n"),
-                     (F.sum(F.col("value").cast(_DEC)) / 3)
+                     (F.sum(F.col("value").cast(DEC)) / 3)
                      .cast("double").alias("total_value")))
 
 

@@ -22,17 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import dsum_raw, dsum_raw_sql
 from .registry import query
-
-_DEC = "decimal(38,12)"
-
-
-def _ds(col):
-    return F.sum(col.cast(_DEC)).cast("double")
-
-
-def _dsum_sql(expr: str) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,12))) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +41,7 @@ def _km_assign_sql(cent: str) -> str:
     SELECT p.vec_id, {cent}.c,
            row_number() OVER (
              PARTITION BY p.vec_id
-             ORDER BY {_dsum_sql(f'(p.v - {cent}.cv) * (p.v - {cent}.cv)')},
+             ORDER BY {dsum_raw_sql(f'(p.v - {cent}.cv) * (p.v - {cent}.cv)')},
                       {cent}.c) AS rn
     FROM pts p JOIN {cent} ON p.dim = {cent}.dim
     GROUP BY p.vec_id, {cent}.c) WHERE rn = 1"""
@@ -60,7 +51,7 @@ def _km_update_sql(assign: str) -> str:
     """Centroid update from assignment CTE ``assign``."""
     return f"""
   SELECT a.c, p.dim,
-         {_dsum_sql('p.v')} / COUNT(*) AS cv
+         {dsum_raw_sql('p.v')} / COUNT(*) AS cv
   FROM {assign} a JOIN pts p ON a.vec_id = p.vec_id
   GROUP BY a.c, p.dim"""
 
@@ -120,8 +111,8 @@ def ml_kmeans_two_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .select("c", "dim", F.col("v").alias("cv")))
 
     def assign(cent_df):
-        d2 = _ds((F.col("v") - F.col("cv"))
-                 * (F.col("v") - F.col("cv"))).alias("d2")
+        d2 = dsum_raw((F.col("v") - F.col("cv"))
+                      * (F.col("v") - F.col("cv"))).alias("d2")
         g = (pts.join(F.broadcast(cent_df), "dim")
                 .groupBy("vec_id", "c").agg(d2))
         wr = W.partitionBy("vec_id").orderBy("d2", "c")
@@ -131,7 +122,7 @@ def ml_kmeans_two_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     def update(assign_df):
         return (assign_df.join(pts, "vec_id")
                 .groupBy("c", "dim")
-                .agg((_ds(F.col("v")) / F.count(F.lit(1))).alias("cv")))
+                .agg((dsum_raw(F.col("v")) / F.count(F.lit(1))).alias("cv")))
 
     a1 = assign(cent)
     cent1 = update(a1)
@@ -157,7 +148,7 @@ v AS (
          date_diff('day', CAST(ts AS DATE), (SELECT hi FROM f)) AS age
   FROM events)
 SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-       {_dsum_sql(
+       {dsum_raw_sql(
            f"ROUND(power(0.5, age / {_HALF_LIFE_DAYS}), 9)")}
          AS decay_score
 FROM v GROUP BY user_id
@@ -189,7 +180,7 @@ def win_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("age") / F.lit(_HALF_LIFE_DAYS)), 9)
     return (v.groupBy("user_id")
              .agg(F.count(F.lit(1)).alias("n_events"),
-                  _ds(term).alias("decay_score")))
+                  dsum_raw(term).alias("decay_score")))
 
 
 # ---------------------------------------------------------------------------
@@ -266,7 +257,7 @@ draws AS (
        LATERAL (SELECT unnest(generate_series(1, nn.n)) AS j) j),
 rep_means AS (
   SELECT d.event_type, d.rep,
-         {_dsum_sql('v.value')} / COUNT(*) AS m
+         {dsum_raw_sql('v.value')} / COUNT(*) AS m
   FROM draws d
   JOIN v ON v.event_type = d.event_type AND v.idx = d.idx
   GROUP BY d.event_type, d.rep)
@@ -312,7 +303,7 @@ def stat_bootstrap_ci_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .alias("idx")))
     rep_means = (draws.join(v, ["event_type", "idx"])
                       .groupBy("event_type", "rep")
-                      .agg((_ds(F.col("value")) / F.count(F.lit(1)))
+                      .agg((dsum_raw(F.col("value")) / F.count(F.lit(1)))
                            .alias("m")))
     return (rep_means.groupBy("event_type")
             .agg(F.round(F.expr("percentile(m, 0.025)"), 6).alias("ci_lo"),

@@ -33,22 +33,16 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.exact import (
+    DEC,
     dsum,
     dsum_sql,
     dsum_str,
     dsum_str_sql,
+    ln9,
     r6,
     r6_sql,
 )
 from .registry import query
-
-_DEC = "decimal(38,12)"
-
-
-def _ln9(col):
-    """ln pinned to 9 dp — the cross-engine-stable log primitive
-    (q_round6d module docstring has the full argument)."""
-    return F.round(F.log(col), 9)
 
 
 # stat_anova_oneway's string-routed sums were promoted to
@@ -322,9 +316,9 @@ def win_growth_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.lag("value").over(ws).alias("prev"))
     lr = p.filter(F.col("prev").isNotNull()).select(
         "user_id", "event_id", "ts",
-        _ln9(F.col("value") / F.col("prev")).alias("lr"))
+        ln9(F.col("value") / F.col("prev")).alias("lr"))
     wc = ws.rowsBetween(W.unboundedPreceding, 0)
-    cum = F.sum(F.col("lr").cast(_DEC)).over(wc).cast("double")
+    cum = F.sum(F.col("lr").cast(DEC)).over(wc).cast("double")
     return (lr.select("user_id", "event_id",
                       r6(100.0 * F.exp(cum)).alias("growth_index"))
               .orderBy("user_id", "event_id"))
@@ -398,7 +392,7 @@ def win_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      F.abs(lo - pc))))
     tr = bars.select("user_id", "day", tr_col.alias("true_range"))
     wf = ws.rowsBetween(-13, 0)
-    atr = F.sum(F.col("true_range").cast(_DEC)).over(wf).cast("double") / 14.0
+    atr = F.sum(F.col("true_range").cast(DEC)).over(wf).cast("double") / 14.0
     a = tr.select("user_id", "day", "true_range",
                   atr.alias("atr_14"),
                   F.count(F.lit(1)).over(wf).alias("n_win"))

@@ -29,10 +29,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum, dsum_sql, r6, r6_sql, safe_div
+from ..functions.exact import dsum, dsum_sql, ln9, r6, r6_sql, safe_div
 from .registry import query
 
-_DEC = "decimal(38,12)"
 
 # Shared score/label derivation (see module docstring). SQL and Spark
 # spell the identical arithmetic; the scalar min/max pair broadcasts.
@@ -47,10 +46,6 @@ scored AS (
                   WHERE value IS NOT NULL AND NOT isnan(value)) m
   WHERE e.value IS NOT NULL AND NOT isnan(e.value))
 """
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
 
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,7 +143,7 @@ def ml_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined aggregate over one scan."""
     sc = _scored(spark, sf_dir)
     y, p = F.col("y"), F.col("p")
-    term = -(y * _ln9(p) + (1 - y) * _ln9(1.0 - p))
+    term = -(y * ln9(p) + (1 - y) * ln9(1.0 - p))
     s = sc.agg(F.count(F.lit(1)).cast("double").alias("n"),
                dsum(term).alias("ll"))
     return s.select(F.col("n").cast("long").alias("n"),
@@ -365,7 +360,7 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = c.crossJoin(F.broadcast(n))
     qa = F.col("ca") / F.col("na")
     qb = F.col("cb") / F.col("nb")
-    terms = cn.agg(dsum((qa - qb) * _ln9(qa / qb)).alias("psi"),
+    terms = cn.agg(dsum((qa - qb) * ln9(qa / qb)).alias("psi"),
                    F.max("na").alias("na"), F.max("nb").alias("nb"))
     return terms.select((F.col("na") - 10.0).alias("n_first"),
                         (F.col("nb") - 10.0).alias("n_second"),

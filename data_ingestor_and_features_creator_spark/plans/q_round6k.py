@@ -33,22 +33,18 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.exact import (
+    DEC,
     dsum,
     dsum_sql,
     dsum_str,
     dsum_str_sql,
+    ln9,
     r6,
     r6_sql,
     safe_sqrt,
     safe_sqrt_sql,
 )
 from .registry import query
-
-_DEC = "decimal(38,12)"
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +95,7 @@ def feature_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = c.crossJoin(F.broadcast(t))
     dp = (F.col("pos") + 0.5) / F.col("tot_pos")
     dn = (F.col("n") - F.col("pos") + 0.5) / F.col("tot_neg")
-    woe = _ln9(dp / dn)
+    woe = ln9(dp / dn)
     w = ct.select("category", "n", "pos", woe.alias("woe"),
                   (dp - dn).alias("dd"))
     return (w.select("category", "n", "pos", r6(F.col("woe")).alias("woe"),
@@ -362,7 +358,7 @@ def win_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws = W.partitionBy("user_id").orderBy("ts", "event_id")
     f5 = ws.rowsBetween(-4, 0)
     f20 = ws.rowsBetween(-19, 0)
-    vdec = F.col("value").cast("string").cast(_DEC)
+    vdec = F.col("value").cast("string").cast(DEC)
     s = ev.select("user_id", "event_id", "ts",
                   F.sum(vdec).over(f5).alias("s5"),
                   F.sum(vdec).over(f20).alias("s20"),

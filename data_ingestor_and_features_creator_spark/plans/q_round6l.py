@@ -24,15 +24,12 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import ln9
 from ..operators import textops
 from .registry import query
 
 _IVL_US = 1_800_000_000  # the 30-min activity interval each event opens
                          # (interval_merge_overlaps' convention)
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
 
 
 # ---------------------------------------------------------------------------
@@ -150,8 +147,8 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(F.broadcast(top.select(F.col("term").alias("t2"),
                                            F.col("c").alias("cb"))), "t2")
               .crossJoin(F.broadcast(ndocs)))
-    pmi = _ln9((F.col("c_ab") * F.col("ndocs"))
-               / (F.col("ca") * F.col("cb").cast("double")))
+    pmi = ln9((F.col("c_ab") * F.col("ndocs"))
+              / (F.col("ca") * F.col("cb").cast("double")))
     return (p.filter(F.col("c_ab") >= 5)
              .select("t1", "t2", "c_ab", F.round(pmi, 6).alias("pmi"))
              .orderBy("t1", "t2"))

@@ -28,10 +28,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.exact import (
+    DEC,
     dsum,
     dsum_sql,
     dsum_str,
     dsum_str_sql,
+    ln9,
     r6,
     r6_sql,
     safe_sqrt,
@@ -39,13 +41,8 @@ from ..functions.exact import (
 )
 from .registry import query
 
-_DEC = "decimal(38,12)"
 
 _INV_4LN2 = "0.3606737602222409"  # 1/(4·ln 2), pinned literal (Parkinson)
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
 
 
 # ---------------------------------------------------------------------------
@@ -252,12 +249,12 @@ def win_parkinson_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = (ev.groupBy("user_id", day.alias("day"))
               .agg(F.max("value").alias("high"), F.min("value").alias("low"))
               .filter(F.col("low") > 0))
-    lhl9 = _ln9(F.col("high") / F.col("low"))
+    lhl9 = ln9(F.col("high") / F.col("low"))
     lhl = bars.select("user_id", "day", (lhl9 * lhl9).alias("hl2"))
     wf = (W.partitionBy("user_id").orderBy("day")
            .rowsBetween(-13, 0))
     w = lhl.select("user_id", "day",
-                   F.sum(F.col("hl2").cast(_DEC)).over(wf).cast("double")
+                   F.sum(F.col("hl2").cast(DEC)).over(wf).cast("double")
                     .alias("s"),
                    F.count(F.lit(1)).over(wf).alias("n_win"))
     vol = safe_sqrt(F.lit(float(_INV_4LN2)) * F.col("s") / 14.0)
@@ -315,7 +312,7 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = r.select("user_id", "event_id", "ts", (ddp * ddp).alias("dd2"))
     wf = ws.rowsBetween(-13, 0)
     w = d.select("user_id", "event_id",
-                 F.sum(F.col("dd2").cast(_DEC)).over(wf).cast("double")
+                 F.sum(F.col("dd2").cast(DEC)).over(wf).cast("double")
                   .alias("s"),
                  F.count(F.lit(1)).over(wf).alias("n_win"))
     return (w.filter(F.col("n_win") == 14)

@@ -25,16 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum, dsum_sql, r6, r6_sql
+from ..functions.exact import dsum, dsum_sql, ln9, r6, r6_sql
 from ..operators import textops
 from .q_round6j import _SCORED_SQL, _scored
 from .registry import query
-
-_DEC = "decimal(38,12)"
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
 
 
 # ---------------------------------------------------------------------------
@@ -90,7 +84,7 @@ def text_char_entropy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("c").cast("double") / F.col("n")
     h = (c.join(n, "doc_id")
           .groupBy("doc_id", "n")
-          .agg(dsum(-p * _ln9(p)).alias("ent")))
+          .agg(dsum(-p * ln9(p)).alias("ent")))
     ent6 = r6(F.col("ent"))
     return (h.select("doc_id", F.col("n").alias("n_chars"),
                      ent6.alias("char_entropy"),
@@ -161,9 +155,9 @@ def text_llr_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, k2 = F.col("k1"), F.col("k2")
     n1, n2 = F.col("n1"), F.col("n2")
     t1 = F.when(k1 > 0,
-                k1 * _ln9(k1 * (n1 + n2) / (n1 * (k1 + k2)))).otherwise(0.0)
+                k1 * ln9(k1 * (n1 + n2) / (n1 * (k1 + k2)))).otherwise(0.0)
     t2 = F.when(k2 > 0,
-                k2 * _ln9(k2 * (n1 + n2) / (n2 * (k1 + k2)))).otherwise(0.0)
+                k2 * ln9(k2 * (n1 + n2) / (n2 * (k1 + k2)))).otherwise(0.0)
     g2 = 2.0 * (t1 + t2)
     r = x.select("term", "k1", "k2", F.round(g2, 6).alias("llr"))
     wr = W.orderBy(F.desc("llr"), "term")

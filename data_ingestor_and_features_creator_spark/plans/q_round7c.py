@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import DEC
 from .registry import query
 
-_DEC = "decimal(38,12)"
 _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"  # geohash alphabet (no a,i,l,o)
 
 
@@ -252,14 +252,14 @@ def agg_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "value",
         F.row_number().over(
             W.partitionBy("user_id").orderBy("ts", "event_id")).alias("t"),
-        F.sum(F.col("value").cast(_DEC)).over(w).cast("double")
+        F.sum(F.col("value").cast(DEC)).over(w).cast("double")
         .alias("pt"))
     term = (F.col("value") - F.col("pt") / F.col("t") - _PH_DELTA)
     w2 = (W.partitionBy("user_id").orderBy("t")
            .rowsBetween(W.unboundedPreceding, W.currentRow))
     m = p.select(
         "user_id", "event_id", "t",
-        F.sum(term.cast("string").cast(_DEC)).over(w2).cast("double")
+        F.sum(term.cast("string").cast(DEC)).over(w2).cast("double")
         .alias("mt"))
     ph = m.select(
         "user_id", "t",
@@ -331,7 +331,7 @@ def stat_rank_biserial(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = cum.agg(
         F.sum("c1").alias("n1"),
         F.sum(F.col("c") - F.col("c1")).alias("n2"),
-        F.sum((F.col("c1").cast("double") * midrank).cast(_DEC))
+        F.sum((F.col("c1").cast("double") * midrank).cast(DEC))
         .cast("double").alias("r1"))
     n1d, n2d = F.col("n1").cast("double"), F.col("n2").cast("double")
     u1 = F.col("r1") - n1d * (F.col("n1") + 1) / 2.0
@@ -395,7 +395,7 @@ def win_kaufman_er(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.rollfast import trailing_agg
     ta = trailing_agg(
         d, ["user_id"], ["t"], (-(_KER_N - 1), 0),
-        sums={"noised": F.col("step").cast("string").cast(_DEC)})
+        sums={"noised": F.col("step").cast("string").cast(DEC)})
     s = ta.select(
         "user_id", "event_id", "t", "value", "lagn",
         F.col("noised").cast("double").alias("noise"))

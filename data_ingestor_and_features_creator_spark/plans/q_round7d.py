@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import DEC
 from .registry import query
 
-_DEC = "decimal(38,12)"
 
 # Wald SPRT for Bernoulli H0: p=0.30 vs H1: p=0.35, alpha = beta = 0.05.
 # ln() evaluated ONCE in Python and pinned to 9 dp — both engines see
@@ -349,16 +349,16 @@ def vec_prefix_energy_matryoshka(spark: SparkSession,
     x2 = F.col("x") * F.col("x")
     pre = F.when(F.col("pos") <= _MRL_K, x2).otherwise(F.lit(0.0))
     pv = (e.groupBy("vec_id", "label")
-           .agg(F.sum(x2.cast("string").cast(_DEC)).cast("double")
+           .agg(F.sum(x2.cast("string").cast(DEC)).cast("double")
                 .alias("e_full"),
-                F.sum(pre.cast("string").cast(_DEC)).cast("double")
+                F.sum(pre.cast("string").cast(DEC)).cast("double")
                 .alias("e_prefix")))
     r = (pv.filter(F.col("e_full") > 0)
            .select("label",
                    (F.col("e_prefix") / F.col("e_full")).alias("ratio")))
     return (r.groupBy("label")
             .agg(F.count(F.lit(1)).alias("n_vecs"),
-                 (F.sum(F.col("ratio").cast("string").cast(_DEC))
+                 (F.sum(F.col("ratio").cast("string").cast(DEC))
                   .cast("double") / F.count(F.lit(1)))
                  .alias("mean_prefix_energy"),
                  F.min("ratio").alias("min_prefix_energy")))

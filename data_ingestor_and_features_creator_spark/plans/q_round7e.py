@@ -25,10 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum_str, dsum_str_sql
+from ..functions.exact import DEC, dsum_str, dsum_str_sql
 from .registry import query
 
-_DEC = "decimal(38,12)"
 
 # round(1/log2(i+1), 9) for i = 1..10 — evaluated once in Python so
 # both engines consume the same literal table (no query-time log2).
@@ -114,7 +113,7 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     def dcg_of(wspec, name):
         ranked = v.select("user_id", "rel",
                           F.row_number().over(wspec).alias("pos"))
-        term = (gain * F.expr(_disc_case("pos"))).cast(_DEC)
+        term = (gain * F.expr(_disc_case("pos"))).cast(DEC)
         return (ranked.filter(F.col("pos") <= _K)
                 .groupBy("user_id")
                 .agg(F.sum(term).cast("double").alias(name)))

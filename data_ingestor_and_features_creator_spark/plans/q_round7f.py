@@ -26,11 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum_str, dsum_str_sql
+from ..functions.exact import DEC, dsum_str, dsum_str_sql
 from ..operators import snapshots
 from .registry import query, scratch_dir
-
-_DEC = "decimal(38,12)"
 
 
 # ---------------------------------------------------------------------------
@@ -288,7 +286,7 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
            .withColumn(
                "cum",
                F.sum((F.col("value") - F.col("bsum") / F.col("bn"))
-                     .cast("string").cast(_DEC))
+                     .cast("string").cast(DEC))
                .over(W.partitionBy("user_id", "nsize", "blk")
                      .orderBy("t")
                      .rowsBetween(W.unboundedPreceding, W.currentRow))

@@ -32,9 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import DEC
 from .registry import query
 
-_DEC = "decimal(38,12)"
 _K = 8           # minhash functions
 _BANDS = 4       # bands of _K // _BANDS rows each
 _ROWS = _K // _BANDS
@@ -277,7 +277,7 @@ def seq_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = j.agg(
         F.countDistinct("prev").alias("n_states"),
         F.max("n").alias("n_transitions"),
-        F.sum(term.cast("string").cast(_DEC)).cast("double")
+        F.sum(term.cast("string").cast(DEC)).cast("double")
         .alias("entropy_rate"))
     return agg.select(F.col("n_states").cast("long").alias("n_states"),
                       F.col("n_transitions").cast("long")

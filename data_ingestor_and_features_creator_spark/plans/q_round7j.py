@@ -26,10 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum_str, dsum_str_sql
+from ..functions.exact import DEC, dsum_str, dsum_str_sql
 from .registry import query
-
-_DEC = "decimal(38,12)"
 
 
 # ---------------------------------------------------------------------------
@@ -103,7 +101,7 @@ def label_cumhazard_nelson_aalen(spark: SparkSession,
     inc = F.col("d").cast("double") / F.col("n_risk")
     return (risk
             .withColumn("cum_hazard",
-                        F.sum(inc.cast("string").cast(_DEC)).over(w_asc)
+                        F.sum(inc.cast("string").cast(DEC)).over(w_asc)
                         .cast("double"))
             .filter(F.col("d") > 0)
             .select(F.col("dur").alias("t_days"),

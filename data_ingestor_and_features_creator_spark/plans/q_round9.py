@@ -33,23 +33,18 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum_str, dsum_str_sql, r6, r6_sql
+from ..functions.exact import (
+    DEC,
+    dsum_raw,
+    dsum_str,
+    dsum_str_sql,
+    ln9,
+    ln9_sql,
+    r6,
+    r6_sql,
+)
 from ..operators import textops
 from .registry import query
-
-_DEC = "decimal(38,12)"
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
-
-
-def _ln9_sql(expr: str) -> str:
-    return f"ROUND(ln({expr}), 9)"
-
-
-def _ds(col):
-    return F.sum(col.cast(_DEC)).cast("double")
 
 
 def _ds_sql(expr: str) -> str:
@@ -208,11 +203,11 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = (m.join(F.broadcast(full), "user_id")
           .select("user_id", "event_type", rk.alias("rk")))
     rj = r.groupBy("event_type").agg(
-        _ds(F.col("rk")).alias("r_j"),
+        dsum_raw(F.col("rk")).alias("r_j"),
         F.count(F.lit(1)).alias("n_blocks"))
     q = rj.agg(F.first("n_blocks").alias("n"),
                F.count(F.lit(1)).alias("k"),
-               _ds(F.col("r_j") * F.col("r_j")).alias("sr2"))
+               dsum_raw(F.col("r_j") * F.col("r_j")).alias("sr2"))
     n, kk = F.col("n"), F.col("k")
     return q.select(
         n.alias("n_blocks"), kk.alias("k_treatments"),
@@ -298,8 +293,8 @@ def win_keltner_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.greatest(h - lo, F.abs(h - pc), F.abs(lo - pc)))
          .alias("trng"))
     wf = ws.rowsBetween(-(_KC_N - 1), 0)
-    mid = F.sum(F.col("typical").cast(_DEC)).over(wf).cast("double") / _KC_N
-    atr = F.sum(F.col("trng").cast(_DEC)).over(wf).cast("double") / _KC_N
+    mid = F.sum(F.col("typical").cast(DEC)).over(wf).cast("double") / _KC_N
+    atr = F.sum(F.col("trng").cast(DEC)).over(wf).cast("double") / _KC_N
     f = tr.select("user_id", "day", mid.alias("mid"), atr.alias("atr"),
                   F.count(F.lit(1)).over(wf).alias("n_win"))
     return (f.filter(F.col("n_win") == _KC_N)
@@ -440,7 +435,7 @@ cp AS (SELECT string_split(bigram, ' ')[1] AS w1,
        FROM cb GROUP BY w1),
 lp AS (
   SELECT cb.bigram,
-         {_ln9_sql('CAST(cb.c12 AS DOUBLE) / cp.c1')} AS lp
+         {ln9_sql('CAST(cb.c12 AS DOUBLE) / cp.c1')} AS lp
   FROM cb JOIN cp ON string_split(cb.bigram, ' ')[1] = cp.w1),
 scored AS (
   SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
@@ -481,12 +476,12 @@ def seq_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = (cb.join(F.broadcast(cp),
                   F.substring_index(cb.bigram, " ", 1) == cp.w1)
             .select("bigram",
-                    _ln9(F.col("c12").cast("double") / F.col("c1"))
+                    ln9(F.col("c12").cast("double") / F.col("c1"))
                     .alias("lp")))
     scored = (bg.join(F.broadcast(lp), "bigram")
                 .groupBy("doc_id")
                 .agg(F.count(F.lit(1)).alias("n_bigrams"),
-                     _ds(F.col("lp")).alias("slp")))
+                     dsum_raw(F.col("lp")).alias("slp")))
     mean_lp = F.col("slp") / F.col("n_bigrams")
     return scored.select("doc_id", "n_bigrams",
                          F.round(mean_lp, 6).alias("mean_logprob"),

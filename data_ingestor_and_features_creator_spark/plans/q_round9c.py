@@ -32,20 +32,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum, dsum_sql, safe_div
+from ..functions.exact import DEC, dsum, dsum_sql, ln9, ln9_sql, safe_div
 from ..operators.graph import connected_components
 from .registry import query
 
-_DEC = "decimal(38,12)"
 _H = "((user_id % 1000003) * 2654435761) % 1000003 % 100"
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
-
-
-def _ln9_sql(expr: str) -> str:
-    return f"ROUND(ln({expr}), 9)"
 
 
 _OK = "value IS NOT NULL AND NOT isnan(value)"
@@ -343,8 +334,8 @@ pq AS (
   FROM c CROSS JOIN t)
 SELECT event_type, n_recent, n_prior,
        ROUND(p, 6) AS p, ROUND(q, 6) AS q,
-       ROUND(0.5 * p * ({_ln9_sql('p')} - {_ln9_sql('(p + q) / 2')})
-             + 0.5 * q * ({_ln9_sql('q')} - {_ln9_sql('(p + q) / 2')}), 6)
+       ROUND(0.5 * p * ({ln9_sql('p')} - {ln9_sql('(p + q) / 2')})
+             + 0.5 * q * ({ln9_sql('q')} - {ln9_sql('(p + q) / 2')}), 6)
          AS js_contrib
 FROM pq
 """)
@@ -382,8 +373,8 @@ def stat_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
                    (F.col("cp").cast("double") / F.col("tp")).alias("p"),
                    (F.col("cq").cast("double") / F.col("tq")).alias("q")))
     m = (F.col("p") + F.col("q")) / 2
-    js = (0.5 * F.col("p") * (_ln9(F.col("p")) - _ln9(m))
-          + 0.5 * F.col("q") * (_ln9(F.col("q")) - _ln9(m)))
+    js = (0.5 * F.col("p") * (ln9(F.col("p")) - ln9(m))
+          + 0.5 * F.col("q") * (ln9(F.col("q")) - ln9(m)))
     return pq.select("event_type", "n_recent", "n_prior",
                      F.round("p", 6).alias("p"),
                      F.round("q", 6).alias("q"),
@@ -627,13 +618,13 @@ def win_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
                          (F.coalesce("cents", F.lit(0)).cast("double")
                           / 100000.0).alias("y")))
     mkt = grid.withColumn(
-        "m", F.sum(F.col("y").cast(_DEC))
+        "m", F.sum(F.col("y").cast(DEC))
               .over(W.partitionBy("day")).cast("double"))
     w = (W.partitionBy("event_type").orderBy("day")
           .rowsBetween(-(_BETA_WIN - 1), 0))
 
     def dwin(col):
-        return F.sum(col.cast(_DEC)).over(w).cast("double")
+        return F.sum(col.cast(DEC)).over(w).cast("double")
 
     roll = mkt.select(
         "event_type", "day",

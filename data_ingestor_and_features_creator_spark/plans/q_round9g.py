@@ -20,16 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum, dsum_sql
+from ..functions.exact import dsum, dsum_sql, ln9, ln9_sql
 from .registry import query
-
-
-def _ln9(col):
-    return F.round(F.log(col), 9)
-
-
-def _ln9_sql(expr: str) -> str:
-    return f"ROUND(ln({expr}), 9)"
 
 
 @query("agg_theil_index", oracle=f"""
@@ -47,7 +39,7 @@ t AS (
 SELECT u.event_type, MAX(t.n_users) AS n_users,
        {dsum_sql(
          "(CAST(u.cents AS DOUBLE) * t.n_users / t.total) * "
-         + _ln9_sql('CAST(u.cents AS DOUBLE) * t.n_users / t.total'))}
+         + ln9_sql('CAST(u.cents AS DOUBLE) * t.n_users / t.total'))}
          / MAX(t.n_users) AS theil_t
 FROM u JOIN t ON u.event_type = t.event_type
 GROUP BY u.event_type
@@ -81,7 +73,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (u.join(F.broadcast(t), "event_type")
              .groupBy("event_type")
              .agg(F.max("n_users").alias("n_users"),
-                  (dsum(r * _ln9(r)) / F.max("n_users"))
+                  (dsum(r * ln9(r)) / F.max("n_users"))
                   .alias("theil_t")))
 
 

@@ -78,3 +78,12 @@ def test_ratio_stats_shapes():
     assert s == {"max": 3.0, "median": 2.0, "argmax": "c"}
     s2 = bench._ratio_stats({"a": 1.0, "b": 2.0})
     assert s2["median"] == 1.5 and s2["argmax"] == "b"
+
+
+def test_headline_ids_are_registered_and_slotted():
+    # bench.py looks every headline id up directly, so a renamed id
+    # fails the run; this catches it before a bench is started
+    from data_ingestor_and_features_creator_spark import plans
+    qs = plans.queries()
+    assert [n for n in bench.HEADLINE if n not in qs] == []
+    assert set(bench.HEADLINE) == set(bench.BASELINE_SLOTS)

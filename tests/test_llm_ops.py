@@ -163,6 +163,17 @@ def test_connected_components_chain_and_isolated_clique(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5}
 
 
+def test_connected_components_releases_its_cache(spark):
+    # the loop-invariant symmetric edge set is cached for the rounds;
+    # once the labels are checkpointed nothing may stay pinned
+    from data_ingestor_and_features_creator_spark.operators import graph
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(
+        [(2, 1), (2, 3), (3, 4), (6, 5)], "a long, b long")
+    graph.connected_components(edges).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def _cc_map(df):
     return {r["n"]: r["cluster_id"] for r in df.collect()}
 

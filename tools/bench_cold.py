@@ -24,15 +24,13 @@ SF1ISH = os.path.join(REPO, "testdata_derived", "sf1ish")
 DEFAULT = ["dedup_fuzzy_minhash", "llm_prep_pipeline_full"]
 
 _CHILD = r"""
-import os, sys, time
+import sys
 sys.path.insert(0, {repo!r})
 from data_ingestor_and_features_creator_spark import plans
+from data_ingestor_and_features_creator_spark.harness import noop_run
 from data_ingestor_and_features_creator_spark.session import get_spark
 spark = get_spark("bench_cold")
-qs = plans.queries()
-t0 = time.perf_counter()
-qs[{name!r}](spark, {sf_dir!r}).write.format("noop").mode("overwrite").save()
-print("COLD_WALL", time.perf_counter() - t0)
+print("COLD_WALL", noop_run(spark, plans.queries()[{name!r}], {sf_dir!r})[0])
 """
 
 

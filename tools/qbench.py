@@ -1,31 +1,42 @@
 #!/usr/bin/env python
-"""One-off per-query measurement helper (round 12): time and/or dump
-the formatted plan for specific registered ids, isolated
-(clearCache between ids, like time_all's default).
+"""Time registered query ids with the shared harness
+(data_ingestor_and_features_creator_spark/harness.py: one first run,
+then N timed reps, caches released between ids) and/or dump their
+formatted plans.
 
 Usage:
-  python tools/qbench.py [--sf DIR] [--reps N] [--plan OUTDIR] [--suffix S] id [id...]
+  python tools/qbench.py [--sf DIR] [--reps N] [--plan OUTDIR] [--suffix S] pattern [pattern...]
 
-For each id: builds the plan, one warm noop run, then N timed noop runs
-(prints each + min). Next to each time it prints how many classes Spark
-compiled during that run (Janino compilations, i.e. codegen cache
-misses): a warm rep that still compiles means the id's working set does
-not fit the codegen cache. With --plan, writes OUTDIR/<id>_<suffix>.txt with
-the .explain("formatted") output of the freshly built DataFrame.
+Each pattern is an fnmatch pattern over the registered ids (a plain id
+matches itself); the ids a pattern matches run in natural order
+(sql_tpch_q2 before sql_tpch_q10). Common forms:
+  python tools/qbench.py --reps 2 'sql_tpch_q*'   # TPC-H single-stream power run
+  python tools/qbench.py --reps 0 '*'             # every id once: the outlier sweep
+
+Per id it prints the first run's wall and codegen compiles, each rep's
+wall and compiles, and the min (the first run when --reps 0). A warm rep
+that still compiles means the id's working set does not fit the codegen
+cache. A failing id is reported and the run goes on. The last line is
+one JSON object: the total of per-id mins, {id: min} and the failures;
+the exit code is 1 if any id failed or a pattern matched nothing. With
+--plan, writes OUTDIR/<id>_<suffix>.txt with the .explain("formatted")
+output of the freshly built DataFrame.
 """
 
 from __future__ import annotations
 
 import argparse
+import fnmatch
+import json
 import os
 import sys
-import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_ingestor_and_features_creator_spark import plans
-from data_ingestor_and_features_creator_spark.session import (
-    codegen_compiles, get_spark)
+from data_ingestor_and_features_creator_spark.harness import id_order, measure
+from data_ingestor_and_features_creator_spark.session import get_spark
 
 
 def main() -> int:
@@ -34,42 +45,45 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--plan", default=None)
     ap.add_argument("--suffix", default="before")
-    ap.add_argument("--cold", action="store_true",
-                    help="clearCache between reps too (per-rep cold)")
     ap.add_argument("ids", nargs="+")
     a = ap.parse_args()
     spark = get_spark("qbench")
     qs = plans.queries()
-    for name in a.ids:
+    failures = {p: "no registered id matches" for p in a.ids
+                if not fnmatch.filter(qs, p)}
+    names = dict.fromkeys(n for p in a.ids
+                          for n in sorted(fnmatch.filter(qs, p), key=id_order))
+    mins: dict[str, float] = {}
+    for name in names:
         fn = qs[name]
         spark.sparkContext.setJobDescription(name)
-        if a.plan:
-            os.makedirs(a.plan, exist_ok=True)
-            df = fn(spark, a.sf)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
-            with open(os.path.join(a.plan, f"{name}_{a.suffix}.txt"),
-                      "w") as fh:
-                fh.write(txt)
-            spark.catalog.clearCache()
-        c0, t0 = codegen_compiles(spark), time.perf_counter()
-        fn(spark, a.sf).write.format("noop").mode("overwrite").save()
-        warm = time.perf_counter() - t0
-        warm_compiles = codegen_compiles(spark) - c0
-        times, compiles = [], []
-        for _ in range(a.reps):
-            if a.cold:
+        try:
+            if a.plan:
+                os.makedirs(a.plan, exist_ok=True)
+                df = fn(spark, a.sf)
+                txt = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")
+                with open(os.path.join(a.plan, f"{name}_{a.suffix}.txt"),
+                          "w") as fh:
+                    fh.write(txt)
                 spark.catalog.clearCache()
-            c0, t0 = codegen_compiles(spark), time.perf_counter()
-            fn(spark, a.sf).write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-            compiles.append(codegen_compiles(spark) - c0)
-        print(f"{name}: cold={warm:.3f} compiles={warm_compiles} "
-              f"reps={times} rep_compiles={compiles} min={min(times):.3f}",
+            t = measure(spark, fn, a.sf, a.reps)
+        except Exception as ex:  # noqa: BLE001
+            traceback.print_exc()
+            failures[name] = str(ex)[:200]
+            spark.catalog.clearCache()  # a failed plan dump leaves its pins
+            print(f"{name}: FAIL {failures[name]}", flush=True)
+            continue
+        mins[name] = round(t.best, 3)
+        print(f"{name}: first={t.first[0]:.3f} compiles={t.first[1]} "
+              f"reps={[round(s, 3) for s, _ in t.reps]} "
+              f"rep_compiles={[c for _, c in t.reps]} min={mins[name]:.3f}",
               flush=True)
-        spark.catalog.clearCache()
     spark.stop()
-    return 0
+    print(json.dumps({"sf_dir": a.sf, "reps": a.reps,
+                      "total_sec": round(sum(mins.values()), 3),
+                      "queries": mins, "failures": failures}))
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -21,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_ingestor_and_features_creator_spark import plans
+from data_ingestor_and_features_creator_spark.harness import noop_run, tpch_ids
 from data_ingestor_and_features_creator_spark.session import get_spark
 
 
@@ -31,10 +32,9 @@ def main() -> int:
     n_streams = int(args[-1]) if args and args[-1].isdigit() else 4
     spark = get_spark("tpch_throughput")
     qs = plans.queries()
-    ids = sorted((n for n in qs if n.startswith("sql_tpch_q")),
-                 key=lambda n: int(n.rsplit("q", 1)[1]))
+    ids = tpch_ids(qs)
     # warmup (codegen + scans) before the timed section
-    qs[ids[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    noop_run(spark, qs[ids[0]], sf_dir)
 
     stream_wall: dict[int, float] = {}
     errors: list[str] = []
@@ -44,8 +44,7 @@ def main() -> int:
         t0 = time.perf_counter()
         try:
             for name in order:
-                qs[name](spark, sf_dir).write.format("noop") \
-                    .mode("overwrite").save()
+                noop_run(spark, qs[name], sf_dir)
         except Exception as ex:  # noqa: BLE001
             errors.append(f"s{sid}:{ex}"[:200])
         stream_wall[sid] = round(time.perf_counter() - t0, 3)
