@@ -13,6 +13,7 @@ from __future__ import annotations
 import fnmatch
 import re
 import time
+import uuid
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,23 +23,40 @@ from .session import codegen_compiles
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-def noop_run(spark: SparkSession, fn: QueryFn, sf_dir: str) -> tuple[float, int]:
-    """Build ``fn``'s DataFrame and run it to the no-op sink. Returns
-    wall seconds (build included) and the codegen compiles it caused
-    (a warm run that still compiles means the id's working set does
-    not fit the codegen cache)."""
+class Run(NamedTuple):
+    seconds: float    # wall, plan build included
+    compiles: int     # codegen compiles the run caused
+    build_jobs: int   # Spark jobs the query function ran while building
+
+
+def noop_run(spark: SparkSession, fn: QueryFn, sf_dir: str) -> Run:
+    """Build ``fn``'s DataFrame and run it to the no-op sink. A warm
+    run that still compiles means the id's working set does not fit the
+    codegen cache. The build runs in its own job group, so the eager
+    jobs a query function launches before it returns a plan (connected
+    components rounds, density probes) are counted apart from the
+    jobs that execute the plan."""
+    sc = spark.sparkContext
+    group = f"harness-build-{uuid.uuid4().hex}"
+    outer = sc.getLocalProperty("spark.jobGroup.id")
     c0, t0 = codegen_compiles(spark), time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0, codegen_compiles(spark) - c0
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    df.write.format("noop").mode("overwrite").save()
+    return Run(time.perf_counter() - t0, codegen_compiles(spark) - c0,
+               len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
 class Timing(NamedTuple):
-    first: tuple[float, int]
-    reps: list[tuple[float, int]]
+    first: Run
+    reps: list[Run]
 
     @property
     def best(self) -> float:
-        return min((s for s, _ in self.reps), default=self.first[0])
+        return min((r.seconds for r in self.reps), default=self.first.seconds)
 
 
 def measure(spark: SparkSession, fn: QueryFn, sf_dir: str, reps: int) -> Timing:

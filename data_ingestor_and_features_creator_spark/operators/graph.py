@@ -19,12 +19,24 @@ web-scale graphs (billions of edges, high skew)
 algorithm (Kiveris et al., "Connected Components in MapReduce and
 Beyond") — same DataFrame machinery, O(log² n) rounds on the
 shrinking edge set instead of O(diameter) on the full graph.
+
+Regime rule: a graph of at most ``LOCAL_EDGES`` edges (200k, measured:
+there the driver finish costs about one distributed round) is labeled
+on the driver by one Arrow collect and a numpy union-find, and comes
+back as a local DataFrame. The probe is ``limit(LOCAL_EDGES + 1)``, so
+the driver never holds more than the bound. Min-id labels are
+deterministic, so both regimes give the same rows and schema; above
+the bound the distributed rounds run unchanged.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 # Density at/above which the bitmap-intersection triangle plan beats
@@ -43,6 +55,18 @@ TRIANGLE_DENSE_DENSITY = 1.0 / 16.0
 # enough that a task's working set stays bounded. Data-derived, not
 # core-count-derived — at 1e9 edges this still yields ~8k tasks.
 _BITMAP_ROWS_PER_TASK = 128_000
+
+# Edge count at or below which connected components finish on the
+# driver instead of in distributed rounds (the MPC rule: contract until
+# the residual fits one machine, then solve it there). Set where the
+# driver finish (Arrow collect, numpy labels, createDataFrame, reading
+# the result back) costs about one distributed star round. Measured on
+# 4 cores, synthetic graphs of 8-node clusters: 8.2k edges 0.10-0.12 s
+# finish vs 0.48 s per round; 82k: 0.42-0.45 vs 0.41 s; 246k: 1.0-1.5
+# vs 0.9-2.4 s; 820k: 3.3-3.5 s finish. The whole distributed path took
+# 2.6 / 4.4 / 6.4 s at the first three sizes. At the bound the driver
+# holds 200k edge pairs: a few MB.
+LOCAL_EDGES = 200_000
 
 
 def triangle_regime(m_edges: int, n_nodes: int) -> str:
@@ -130,6 +154,55 @@ def triangle_count_auto(e: DataFrame) -> tuple[DataFrame, str, int]:
     return plan, regime, m_edges
 
 
+def _min_labels(t: pa.Table) -> pa.Table:
+    """(n, cluster_id) for the graph whose edges are the rows of ``t``'s
+    two endpoint columns: every non-null endpoint is labeled with the
+    minimum node of its component. An edge with a null endpoint
+    connects nothing, but its other endpoint is still a node, and the
+    null itself is one node labeled null — what the distributed rounds
+    of ``connected_components`` produce.
+
+    Vectorized min-label hooking with pointer jumping: each round hooks
+    the larger root of every edge whose endpoints have different roots
+    under the smaller one, then jumps every pointer to its root. Every
+    round that still finds such an edge removes at least one root, so
+    the loop ends; each round is O(|E|) numpy work. On 100k-node graphs
+    it took 1-11 rounds (11 for a chain with shuffled ids)."""
+    a, b = t.column(0), t.column(1)
+    both = pc.and_(pc.is_valid(a), pc.is_valid(b))
+    ends = [pc.filter(c, both).to_numpy() for c in (a, b)]
+    lone = [pc.drop_null(pc.filter(c, pc.invert(both))).to_numpy()
+            for c in (a, b)]
+    ids, inv = np.unique(np.concatenate(ends + lone), return_inverse=True)
+    src, dst = inv[:2 * len(ends[0])].reshape(2, -1)
+    lab = np.arange(ids.size)
+    while True:
+        lo = np.minimum(lab[src], lab[dst])
+        hi = np.maximum(lab[src], lab[dst])
+        if np.array_equal(lo, hi):
+            break
+        np.minimum.at(lab, hi, lo)
+        nxt = lab[lab]
+        while not np.array_equal(nxt, lab):
+            lab, nxt = nxt, nxt[nxt]
+    n, c = pa.array(ids), pa.array(ids[lab])
+    tail = pa.nulls(int(a.null_count + b.null_count > 0), n.type)
+    return pa.table({"n": pa.concat_arrays([n, tail]),
+                     "cluster_id": pa.concat_arrays([c, tail])})
+
+
+def _finish_on_driver(e: DataFrame, schema: StructType) -> DataFrame | None:
+    """Connected components of the edge set ``e`` (two endpoint
+    columns) solved on the driver, as a (n, cluster_id) frame of
+    ``schema``; None when ``e`` has more than LOCAL_EDGES rows. The
+    limit bounds what reaches the driver at any input size, so the
+    probe is safe to run before the distributed rounds."""
+    t = e.limit(LOCAL_EDGES + 1).toArrow()
+    if t.num_rows > LOCAL_EDGES:
+        return None
+    return e.sparkSession.createDataFrame(_min_labels(t), schema)
+
+
 def connected_components_star(edges: DataFrame, a_col: str = "a",
                               b_col: str = "b",
                               max_iter: int = 25) -> DataFrame:
@@ -150,11 +223,24 @@ def connected_components_star(edges: DataFrame, a_col: str = "a",
     Fixpoint = the edge set stops changing; then every edge (u, v) IS
     the final (node → component-min) assignment. Equivalence with
     ``connected_components`` is pinned in tests on chain / clique /
-    random graphs."""
+    random graphs.
+
+    Regime: the canonical edge set is probed with
+    ``limit(LOCAL_EDGES + 1)``; at most LOCAL_EDGES (200k) edges are
+    labeled on the driver without any round, more run the rounds below
+    unchanged. Nodes with only a self-loop or a null partner are
+    dropped in both regimes."""
     e = (edges.select(F.greatest(a_col, b_col).alias("u"),
                       F.least(a_col, b_col).alias("v"))
               .filter(F.col("u") != F.col("v"))
               .distinct().localCheckpoint())
+    # the rounds' min aggregates make both output columns nullable, so
+    # the driver finish declares them so too
+    t = e.schema["u"].dataType
+    schema = StructType([StructField("n", t), StructField("cluster_id", t)])
+    local = _finish_on_driver(e, schema)
+    if local is not None:
+        return local
     n_prev = e.count()
     for _ in range(max_iter):
         # --- large-star (round 12 fusion): m(x) = min(Γ(x) ∪ {x}) can
@@ -228,8 +314,23 @@ def connected_components(edges: DataFrame, a_col: str = "a",
     representative is deterministic, matching a recursive-CTE oracle).
 
     Only nodes that appear in at least one edge are labeled — callers
-    union isolated nodes back as their own singletons if needed.
+    union isolated nodes back as their own singletons if needed. A
+    self-loop-only node is labeled as itself; an edge with a null
+    endpoint connects nothing, and the null is one node labeled null.
+
+    Regime: an input of at most LOCAL_EDGES (200k) edge rows, probed
+    with ``limit(LOCAL_EDGES + 1)``, is labeled on the driver; larger
+    inputs run the propagation rounds below, unchanged.
     """
+    # the labels take the endpoints' union type and nullability, as the
+    # rounds' output does
+    n = (edges.select(F.col(a_col).alias("n"))
+              .union(edges.select(F.col(b_col).alias("n"))).schema["n"])
+    local = _finish_on_driver(
+        edges.select(a_col, b_col),
+        StructType([n, StructField("cluster_id", n.dataType, n.nullable)]))
+    if local is not None:
+        return local
     # Round 12: sym is LOOP-INVARIANT and every round joins it on "m" —
     # so materialize it hash-partitioned (and sorted) by m via cache(),
     # which preserves outputPartitioning/outputOrdering into the

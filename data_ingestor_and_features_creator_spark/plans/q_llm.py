@@ -651,6 +651,9 @@ def dedup_minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup = (textops.jaccard_verify(pairs, aug, threshold=0.3, sets=sets)
                   .select("a", "b"))
     cc = graph.connected_components_star(dup)
+    # cc is checkpointed or driver-built, and the tail below reads only
+    # cc and plant, so nothing reads the shingle sets any more
+    sets.unpersist()
     # Report tail reads ONLY the CC labels (round-11 optimization): the
     # old form materialized a corpus-wide keep/drop list (aug LEFT JOIN
     # cc, labels coalesced to self) and then derived BOTH report sides

@@ -59,6 +59,18 @@ def few_shuffle_partitions(spark):
     spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+@pytest.fixture(params=["distributed", "local"])
+def cc_regime(request, monkeypatch):
+    """Run a connected-components test in both regimes: with the
+    driver-finish bound at 0, so every non-empty graph takes the
+    distributed rounds, and at its default, under which every test
+    graph finishes on the driver."""
+    from data_ingestor_and_features_creator_spark.operators import graph
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "LOCAL_EDGES", 0)
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR

@@ -8,6 +8,7 @@ import os
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from data_ingestor_and_features_creator_spark import harness, plans
 
@@ -30,7 +31,8 @@ def test_every_run_rebuilds_the_dataframe(spark, sf_dir, reps):
     t = harness.measure(spark, fn, sf_dir, reps)
     assert builds == [sf_dir] * (1 + reps)
     assert len(t.reps) == reps
-    assert t.best == (min(s for s, _ in t.reps) if reps else t.first[0])
+    assert t.best == (min(r.seconds for r in t.reps) if reps
+                      else t.first.seconds)
 
 
 def test_measure_releases_what_the_id_pinned(spark, sf_dir):
@@ -49,6 +51,26 @@ def test_measure_releases_what_the_id_pinned(spark, sf_dir):
     with pytest.raises(RuntimeError, match="planted"):
         harness.measure(spark, failing, sf_dir, 1)
     assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize("eager", [0, 3])
+def test_build_jobs_counts_only_the_jobs_run_while_building(spark, eager):
+    # each collect of a range is one job; the execution of the returned
+    # plan (its own jobs) must not be counted, and the caller's job group
+    # must be back in place afterwards
+    def fn(s, d):
+        for _ in range(eager):
+            s.range(3).collect()
+        return s.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "outer")
+    try:
+        run = harness.noop_run(spark, fn, "")
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert run.build_jobs == eager
 
 
 def test_tpch_ids_are_the_22_in_query_order():

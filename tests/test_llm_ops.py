@@ -152,7 +152,7 @@ def test_data_split_hash_deterministic_and_total(spark, sf_dir):
     assert out == again                        # rerun-stable
 
 
-def test_connected_components_chain_and_isolated_clique(spark):
+def test_connected_components_chain_and_isolated_clique(spark, cc_regime):
     # chain 1-2-3-4 needs multi-round propagation; 5-6 is a separate
     # component; min reachable id becomes the cluster id
     from data_ingestor_and_features_creator_spark.operators import graph
@@ -178,7 +178,7 @@ def _cc_map(df):
     return {r["n"]: r["cluster_id"] for r in df.collect()}
 
 
-def test_star_cc_equals_label_propagation(spark):
+def test_star_cc_equals_label_propagation(spark, cc_regime):
     from data_ingestor_and_features_creator_spark.operators import graph
     rng = np.random.default_rng(11)
     # chain (worst diameter for propagation), clique, random pairs
@@ -191,6 +191,85 @@ def test_star_cc_equals_label_propagation(spark):
     star = _cc_map(graph.connected_components_star(edges))
     assert lp == star
     assert star[19] == 0 and star[104] == 100  # chain and clique roots
+
+
+def test_driver_labels_match_union_find():
+    """The numpy finish against a plain union-find on graphs that need
+    many hooking rounds (a chain with shuffled ids) or few (clusters)."""
+    import pyarrow as pa
+    from data_ingestor_and_features_creator_spark.operators import graph
+    rng = np.random.default_rng(5)
+    p = rng.permutation(3000)
+    for a, b in [(p[:-1], p[1:]),
+                 (rng.integers(0, 3000, 3000), rng.integers(0, 3000, 3000)),
+                 (np.arange(3000), np.arange(3000) // 8 * 8
+                  + rng.integers(0, 8, 3000))]:
+        par = {}
+
+        def find(x):
+            while par.setdefault(x, x) != x:
+                x = par[x]
+            return x
+
+        for x, y in zip(a.tolist(), b.tolist()):
+            rx, ry = find(x), find(y)
+            par[max(rx, ry)] = min(rx, ry)
+        t = graph._min_labels(pa.table({"a": a, "b": b}))
+        assert dict(zip(t.column("n").to_pylist(),
+                        t.column("cluster_id").to_pylist())) == {
+            x: find(x) for x in list(par)}
+
+
+# (rows, DDL, labels from connected_components, labels from
+# connected_components_star): label propagation labels a self-loop-only
+# node and a null endpoint; star contraction drops both.
+_REGIME_GRAPHS = {
+    "empty": ([], "a long, b long", {}, {}),
+    "self_loop_only_node": (
+        [(1, 2), (2, 3), (7, 7)], "a long, b long",
+        {1: 1, 2: 1, 3: 1, 7: 7}, {1: 1, 2: 1, 3: 1}),
+    "int_endpoints": (
+        [(2, 1), (3, 2), (9, 8), (8, 9), (4, 5)], "a int, b int",
+        {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 8: 8, 9: 8},
+        {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 8: 8, 9: 8}),
+    "null_endpoints": (
+        [(2, 1), (2, None), (None, 5), (None, None), (9, 8)],
+        "a long, b long",
+        {1: 1, 2: 1, 5: 5, 8: 8, 9: 8, None: None},
+        {1: 1, 2: 1, 8: 8, 9: 8}),
+}
+
+
+@pytest.mark.parametrize("fn", ["connected_components",
+                                "connected_components_star"])
+@pytest.mark.parametrize("case", sorted(_REGIME_GRAPHS))
+def test_cc_regimes_agree_at_the_bound(spark, monkeypatch, case, fn):
+    """Same labels and output schema whether the graph just fits the
+    driver finish (bound = |E|) or just misses it (|E| - 1, where every
+    round runs distributed)."""
+    from data_ingestor_and_features_creator_spark.operators import graph
+    rows, ddl, lp, star = _REGIME_GRAPHS[case]
+    edges = spark.createDataFrame(rows, ddl)
+    # |E| as each algorithm counts it: the input rows for label
+    # propagation, the distinct non-loop canonical edges for star
+    m = (len(rows) if fn == "connected_components" else
+         len({(max(a, b), min(a, b)) for a, b in rows
+              if None not in (a, b) and a != b}))
+    finishes = []
+    solve = graph._min_labels
+    monkeypatch.setattr(graph, "_min_labels",
+                        lambda t: finishes.append(1) or solve(t))
+    got, calls = {}, {}
+    for bound in (m, m - 1):
+        monkeypatch.setattr(graph, "LOCAL_EDGES", bound)
+        del finishes[:]
+        df = getattr(graph, fn)(edges)
+        got[bound], calls[bound] = (df.schema, _cc_map(df)), len(finishes)
+    assert calls == {m: 1, m - 1: 0}
+    assert got[m] == got[m - 1]
+    assert got[m][1] == (lp if fn == "connected_components" else star)
+    assert [f.dataType.simpleString() for f in got[m][0]] == (
+        ["int", "int"] if case == "int_endpoints" else ["bigint", "bigint"])
 
 
 def test_segment_dedup_drops_planted_boilerplate(spark):

@@ -336,7 +336,7 @@ def test_sliding_median_wide_frame_takes_approx_path(spark, sf_dir):
             0.02 * abs(want), 1e-6)
 
 
-def test_star_cc_uses_no_exceptall_probe(spark, monkeypatch):
+def test_star_cc_uses_no_exceptall_probe(spark, monkeypatch, cc_regime):
     """The fixpoint probe must stay count+anti-join shaped: exceptAll
     reshuffles the full edge set twice per round at 100 TB."""
     from pyspark.sql import DataFrame

@@ -13,14 +13,16 @@ matches itself); the ids a pattern matches run in natural order
   python tools/qbench.py --reps 2 'sql_tpch_q*'   # TPC-H single-stream power run
   python tools/qbench.py --reps 0 '*'             # every id once: the outlier sweep
 
-Per id it prints the first run's wall and codegen compiles, each rep's
-wall and compiles, and the min (the first run when --reps 0). A warm rep
-that still compiles means the id's working set does not fit the codegen
-cache. A failing id is reported and the run goes on. The last line is
-one JSON object: the total of per-id mins, {id: min} and the failures;
-the exit code is 1 if any id failed or a pattern matched nothing. With
---plan, writes OUTDIR/<id>_<suffix>.txt with the .explain("formatted")
-output of the freshly built DataFrame.
+Per id it prints the first run's wall, codegen compiles and build jobs,
+the same three for each rep, and the min wall (the first run when
+--reps 0). A warm rep that still compiles means the id's working set
+does not fit the codegen cache; build jobs are the Spark jobs the query
+function ran eagerly while building its plan. A failing id is reported
+and the run goes on. The last line is one JSON object: the total of
+per-id mins, {id: min} and the failures; the exit code is 1 if any id
+failed or a pattern matched nothing. With --plan, writes
+OUTDIR/<id>_<suffix>.txt with the .explain("formatted") output of the
+freshly built DataFrame.
 """
 
 from __future__ import annotations
@@ -75,10 +77,12 @@ def main() -> int:
             print(f"{name}: FAIL {failures[name]}", flush=True)
             continue
         mins[name] = round(t.best, 3)
-        print(f"{name}: first={t.first[0]:.3f} compiles={t.first[1]} "
-              f"reps={[round(s, 3) for s, _ in t.reps]} "
-              f"rep_compiles={[c for _, c in t.reps]} min={mins[name]:.3f}",
-              flush=True)
+        print(f"{name}: first={t.first.seconds:.3f} "
+              f"compiles={t.first.compiles} build_jobs={t.first.build_jobs} "
+              f"reps={[round(r.seconds, 3) for r in t.reps]} "
+              f"rep_compiles={[r.compiles for r in t.reps]} "
+              f"rep_build_jobs={[r.build_jobs for r in t.reps]} "
+              f"min={mins[name]:.3f}", flush=True)
     spark.stop()
     print(json.dumps({"sf_dir": a.sf, "reps": a.reps,
                       "total_sec": round(sum(mins.values()), 3),
