@@ -71,12 +71,17 @@ def measure(spark: SparkSession, fn: QueryFn, sf_dir: str, reps: int) -> Timing:
     and leave them pinned; across a long-lived session those caches
     accumulated and inflated late ids 3-6x (stat_ancova 45.9 s in a
     shared-session sweep vs 1.2 s isolated). Within one id the caches
-    stay warm across its reps."""
+    stay warm across its reps. ``clearCache`` releases only cached
+    DataFrames; ``localCheckpoint`` blocks (connected components' edge
+    sets) stay until the JVM collects their RDD, so every RDD still
+    persisted is unpersisted too."""
     try:
         first = noop_run(spark, fn, sf_dir)
         return Timing(first, [noop_run(spark, fn, sf_dir) for _ in range(reps)])
     finally:
         spark.catalog.clearCache()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist()
 
 
 def id_order(name: str) -> tuple:

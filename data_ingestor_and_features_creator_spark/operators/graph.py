@@ -3,22 +3,18 @@ clustering (SURVEY.md §2.11 extension).
 
 Near-dup detection emits PAIRS; acting on them (keep one canonical doc
 per duplicate group) needs the transitive closure: connected
-components. The classic Spark shape is iterative min-label
-propagation: every node adopts the minimum label among itself and its
-neighbors until fixpoint. Iterations = graph diameter, and dup
-clusters are shallow (near-cliques), so this converges in a handful of
-rounds.
+components, each node labeled with the minimum node of its component.
+``connected_components_star`` is the one operator for it: the
+large-star/small-star contraction (Kiveris et al., "Connected
+Components in MapReduce and Beyond"), O(log² n) rounds on a shrinking
+edge set, so long chains and high-degree hubs both contract
+geometrically instead of needing O(diameter) rounds over the full
+graph.
 
-Scale notes (100 TB): each round is one equi-join + one hash
-aggregate — both shuffle on the node id, so successive rounds reuse
-the same hash partitioning. ``localCheckpoint`` truncates the plan
+Scale notes (100 TB): each round is a few joins and hash aggregates,
+all shuffling on the node id. ``localCheckpoint`` truncates the plan
 lineage every round; without it the plan doubles per iteration and
-the driver chokes on analysis long before the executors sweat. For
-web-scale graphs (billions of edges, high skew)
-``connected_components_star`` implements the large-star/small-star
-algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond") — same DataFrame machinery, O(log² n) rounds on the
-shrinking edge set instead of O(diameter) on the full graph.
+the driver chokes on analysis long before the executors sweat.
 
 Regime rule: a graph of at most ``LOCAL_EDGES`` edges (200k, measured:
 there the driver finish costs about one distributed round) is labeled
@@ -26,14 +22,13 @@ on the driver by one Arrow collect and a numpy union-find, and comes
 back as a local DataFrame. The probe is ``limit(LOCAL_EDGES + 1)``, so
 the driver never holds more than the bound. Min-id labels are
 deterministic, so both regimes give the same rows and schema; above
-the bound the distributed rounds run unchanged.
+the bound the distributed rounds run.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -67,6 +62,11 @@ _BITMAP_ROWS_PER_TASK = 128_000
 # 2.6 / 4.4 / 6.4 s at the first three sizes. At the bound the driver
 # holds 200k edge pairs: a few MB.
 LOCAL_EDGES = 200_000
+
+# Distributed star rounds after which connected components give up and
+# raise: the rounds converge in O(log² n), and a graph still changing
+# after this many is a fault to report, not labels to return.
+MAX_ROUNDS = 25
 
 
 def triangle_regime(m_edges: int, n_nodes: int) -> str:
@@ -156,11 +156,8 @@ def triangle_count_auto(e: DataFrame) -> tuple[DataFrame, str, int]:
 
 def _min_labels(t: pa.Table) -> pa.Table:
     """(n, cluster_id) for the graph whose edges are the rows of ``t``'s
-    two endpoint columns: every non-null endpoint is labeled with the
-    minimum node of its component. An edge with a null endpoint
-    connects nothing, but its other endpoint is still a node, and the
-    null itself is one node labeled null — what the distributed rounds
-    of ``connected_components`` produce.
+    two non-null endpoint columns: every endpoint is labeled with the
+    minimum node of its component.
 
     Vectorized min-label hooking with pointer jumping: each round hooks
     the larger root of every edge whose endpoints have different roots
@@ -168,13 +165,9 @@ def _min_labels(t: pa.Table) -> pa.Table:
     round that still finds such an edge removes at least one root, so
     the loop ends; each round is O(|E|) numpy work. On 100k-node graphs
     it took 1-11 rounds (11 for a chain with shuffled ids)."""
-    a, b = t.column(0), t.column(1)
-    both = pc.and_(pc.is_valid(a), pc.is_valid(b))
-    ends = [pc.filter(c, both).to_numpy() for c in (a, b)]
-    lone = [pc.drop_null(pc.filter(c, pc.invert(both))).to_numpy()
-            for c in (a, b)]
-    ids, inv = np.unique(np.concatenate(ends + lone), return_inverse=True)
-    src, dst = inv[:2 * len(ends[0])].reshape(2, -1)
+    ends = [t.column(i).to_numpy() for i in (0, 1)]
+    ids, inv = np.unique(np.concatenate(ends), return_inverse=True)
+    src, dst = inv.reshape(2, -1)
     lab = np.arange(ids.size)
     while True:
         lo = np.minimum(lab[src], lab[dst])
@@ -185,64 +178,53 @@ def _min_labels(t: pa.Table) -> pa.Table:
         nxt = lab[lab]
         while not np.array_equal(nxt, lab):
             lab, nxt = nxt, nxt[nxt]
-    n, c = pa.array(ids), pa.array(ids[lab])
-    tail = pa.nulls(int(a.null_count + b.null_count > 0), n.type)
-    return pa.table({"n": pa.concat_arrays([n, tail]),
-                     "cluster_id": pa.concat_arrays([c, tail])})
+    return pa.table({"n": pa.array(ids), "cluster_id": pa.array(ids[lab])})
 
 
-def _finish_on_driver(e: DataFrame, schema: StructType) -> DataFrame | None:
-    """Connected components of the edge set ``e`` (two endpoint
-    columns) solved on the driver, as a (n, cluster_id) frame of
-    ``schema``; None when ``e`` has more than LOCAL_EDGES rows. The
-    limit bounds what reaches the driver at any input size, so the
-    probe is safe to run before the distributed rounds."""
-    t = e.limit(LOCAL_EDGES + 1).toArrow()
-    if t.num_rows > LOCAL_EDGES:
-        return None
-    return e.sparkSession.createDataFrame(_min_labels(t), schema)
+def connected_components_star(edges: DataFrame) -> DataFrame:
+    """(n, cluster_id) for every node of the edge set ``edges`` (columns
+    a, b); cluster_id is the MINIMUM node id in the component, so the
+    canonical representative is deterministic and matches a
+    recursive-CTE oracle. Only nodes with at least one edge to another
+    node are labeled: a self-loop or a null partner connects nothing,
+    and callers union isolated nodes back as their own singletons.
 
-
-def connected_components_star(edges: DataFrame, a_col: str = "a",
-                              b_col: str = "b",
-                              max_iter: int = 25) -> DataFrame:
-    """(node, cluster_id) via LARGE-STAR / SMALL-STAR (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — the skewed-graph
-    scale path next to plain min-label propagation: label propagation
-    needs O(diameter) rounds and keeps the full edge set live every
-    round; star-contraction converges in O(log² n) rounds ON THE EDGE
+    LARGE-STAR / SMALL-STAR (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") converges in O(log² n) rounds ON THE EDGE
     SET ITSELF, collapsing each component toward a star rooted at its
     minimum node, so long chains and high-degree hubs both shrink
-    geometrically.
-
-    Per round (all DataFrame ops, shuffles keyed on the node id):
+    geometrically. Per round (all DataFrame ops, shuffles keyed on the
+    node id):
     - large-star: for each node u, every LARGER neighbor v > u is
       re-pointed at m(u) = min(Γ(u) ∪ {u});
     - small-star: orient edges (big → small); each node u and its
       smaller neighbors all re-point at their collective minimum.
     Fixpoint = the edge set stops changing; then every edge (u, v) IS
-    the final (node → component-min) assignment. Equivalence with
-    ``connected_components`` is pinned in tests on chain / clique /
-    random graphs.
+    the final (node → component-min) assignment. A graph that has not
+    reached it after MAX_ROUNDS rounds raises instead of returning
+    partial labels.
 
     Regime: the canonical edge set is probed with
     ``limit(LOCAL_EDGES + 1)``; at most LOCAL_EDGES (200k) edges are
-    labeled on the driver without any round, more run the rounds below
-    unchanged. Nodes with only a self-loop or a null partner are
-    dropped in both regimes."""
-    e = (edges.select(F.greatest(a_col, b_col).alias("u"),
-                      F.least(a_col, b_col).alias("v"))
+    labeled on the driver without any round, more run the rounds below.
+    Both regimes give the same rows and schema, pinned in tests on
+    chain / clique / random graphs against a plain union-find."""
+    # greatest/least skip a null argument, so a null partner becomes a
+    # self-loop, and the u != v filter drops self-loops and (null, null)
+    e = (edges.select(F.greatest("a", "b").alias("u"),
+                      F.least("a", "b").alias("v"))
               .filter(F.col("u") != F.col("v"))
               .distinct().localCheckpoint())
-    # the rounds' min aggregates make both output columns nullable, so
-    # the driver finish declares them so too
-    t = e.schema["u"].dataType
-    schema = StructType([StructField("n", t), StructField("cluster_id", t)])
-    local = _finish_on_driver(e, schema)
-    if local is not None:
-        return local
+    t = e.limit(LOCAL_EDGES + 1).toArrow()
+    if t.num_rows <= LOCAL_EDGES:
+        # the rounds' min aggregates make both output columns nullable,
+        # so the driver finish declares them so too
+        typ = e.schema["u"].dataType
+        return e.sparkSession.createDataFrame(
+            _min_labels(t), StructType([StructField("n", typ),
+                                        StructField("cluster_id", typ)]))
     n_prev = e.count()
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # --- large-star (round 12 fusion): m(x) = min(Γ(x) ∪ {x}) can
         # only be x itself or a SMALLER neighbor, and in the canonical
         # (u > v) edge table the smaller neighbors of x are exactly the
@@ -301,85 +283,11 @@ def connected_components_star(edges: DataFrame, a_col: str = "a",
         e, n_prev = e2, n_new
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint after "
+            f"{MAX_ROUNDS} rounds, {n_prev} edges left")
     return (e.select(F.col("u").alias("n"), F.col("v").alias("cluster_id"))
              .union(e.select(F.col("v").alias("n"),
                              F.col("v").alias("cluster_id")))
              .distinct())
-
-
-def connected_components(edges: DataFrame, a_col: str = "a",
-                         b_col: str = "b", max_iter: int = 25) -> DataFrame:
-    """(node, cluster_id) for every node in ``edges``; cluster_id is
-    the MINIMUM node id reachable in the component (so the canonical
-    representative is deterministic, matching a recursive-CTE oracle).
-
-    Only nodes that appear in at least one edge are labeled — callers
-    union isolated nodes back as their own singletons if needed. A
-    self-loop-only node is labeled as itself; an edge with a null
-    endpoint connects nothing, and the null is one node labeled null.
-
-    Regime: an input of at most LOCAL_EDGES (200k) edge rows, probed
-    with ``limit(LOCAL_EDGES + 1)``, is labeled on the driver; larger
-    inputs run the propagation rounds below, unchanged.
-    """
-    # the labels take the endpoints' union type and nullability, as the
-    # rounds' output does
-    n = (edges.select(F.col(a_col).alias("n"))
-              .union(edges.select(F.col(b_col).alias("n"))).schema["n"])
-    local = _finish_on_driver(
-        edges.select(a_col, b_col),
-        StructType([n, StructField("cluster_id", n.dataType, n.nullable)]))
-    if local is not None:
-        return local
-    # Round 12: sym is LOOP-INVARIANT and every round joins it on "m" —
-    # so materialize it hash-partitioned (and sorted) by m via cache(),
-    # which preserves outputPartitioning/outputOrdering into the
-    # InMemoryRelation (localCheckpoint's LogicalRDD does not: probed
-    # UnknownPartitioning on this Spark). Every round's sort-merge join
-    # then skips the sym-side exchange AND sort — the old plan
-    # reshuffled the full 2|E| edge set every round. One repartition
-    # before the dedup keeps setup at a single shuffle (dedup and sort
-    # reuse the m-partitioning; same-(n,m) rows share m, so a
-    # by-m-partitioned local dedup is exact).
-    sym = (edges.select(F.col(a_col).alias("n"), F.col(b_col).alias("m"))
-                .union(edges.select(F.col(b_col).alias("n"),
-                                    F.col(a_col).alias("m")))
-                .repartition("m")
-                .dropDuplicates(["n", "m"])
-                .sortWithinPartitions("m")
-                .cache())
-    labels = sym.select("n").distinct().withColumn("lbl", F.col("n"))
-
-    def _lbl_sum(df: DataFrame) -> object:
-        # decimal(38,0): exact at any node count (a raw BIGINT sum of
-        # 64-bit ids overflows on billion-node graphs)
-        return df.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))
-                       .alias("s")).collect()[0]["s"]
-
-    prev_sum = None
-    for _ in range(max_iter):
-        neighbor_min = (sym.join(labels.select(F.col("n").alias("m"),
-                                               F.col("lbl").alias("mlbl")),
-                                 "m")
-                           .groupBy("n").agg(F.min("mlbl").alias("nlbl")))
-        new_labels = (labels.join(neighbor_min, "n", "left")
-                            .select("n", F.least(
-                                "lbl", F.coalesce("nlbl", "lbl"))
-                                .alias("lbl"))
-                            .localCheckpoint())
-        # Fixpoint probe with ZERO extra joins: each node's label is
-        # monotonically non-increasing (least of old label and
-        # neighbor min), so the label vector changed iff its total sum
-        # strictly decreased. One map-side-partial aggregate over the
-        # freshly checkpointed labels — vs the old self-join + filter
-        # + count that reshuffled the full label set every round.
-        new_sum = _lbl_sum(new_labels)
-        labels = new_labels
-        if prev_sum is not None and new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # Every round's labels are eagerly checkpointed, so nothing reads
-    # sym once the loop ends: release it rather than leave it pinned in
-    # the caller's session.
-    sym.unpersist()
-    return labels.select(F.col("n"), F.col("lbl").alias("cluster_id"))

@@ -589,29 +589,20 @@ def _cluster_report(cc: DataFrame) -> DataFrame:
               .orderBy("vec_id"))
 
 
+@query("dedup_cluster_cc", oracle=_CC_ORACLE)
 @query("dedup_cluster_cc_star", oracle=_CC_ORACLE)
 def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate-cluster assignment as dedup_cluster_cc but via
-    LARGE-STAR/SMALL-STAR contraction (operators/graph.py,
-    connected_components_star) — the web-scale path: O(log² n) rounds
-    on the shrinking edge set vs O(diameter) rounds of full-graph
-    propagation, robust to high-degree hubs. Identical oracle: both
-    algorithms must land on min-node-per-component exactly."""
+    """Duplicate-CLUSTER assignment: transitive closure over the
+    embedding-cosine near-dup pair graph by large-star/small-star
+    contraction (operators/graph.py, connected_components_star),
+    canonical doc = min vec_id per component. This is the step that
+    turns pairwise dedup output into an actionable keep/drop list.
+    Registered under both ids, so both stay in the registry. The oracle
+    is a DuckDB recursive CTE computing min-reachable-node — an exact
+    SQL twin of the fixpoint, so this 'iterative algorithm' is fully
+    oracle-checked."""
     pairs = dedup_embedding_cosine(spark, sf_dir).select("a", "b")
     return _cluster_report(graph.connected_components_star(pairs))
-
-
-@query("dedup_cluster_cc", oracle=_CC_ORACLE)
-def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-CLUSTER assignment: transitive closure over the
-    embedding-cosine near-dup pair graph via iterative min-label
-    propagation (operators/graph.py), canonical doc = min vec_id per
-    component. This is the step that turns pairwise dedup output into
-    an actionable keep/drop list. The oracle is a DuckDB recursive CTE
-    computing min-reachable-node — an exact SQL twin of the fixpoint,
-    so this 'iterative algorithm' is fully oracle-checked."""
-    pairs = dedup_embedding_cosine(spark, sf_dir).select("a", "b")
-    return _cluster_report(graph.connected_components(pairs))
 
 
 @query("dedup_minhash_cluster", oracle="""
@@ -1229,8 +1220,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-iteration reuse diamond); each iteration is one shuffle on dst
     — rank updates never leave the JVM, and at 1000 executors the edge
     table partitioning is reused across all rounds. The single driver
-    scalar is N (node count), same convergence-check precedent as
-    dedup_cluster_cc (operators/graph.py)."""
+    scalar is N (node count)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     edges = (li.join(o, li.l_orderkey == o.o_orderkey)

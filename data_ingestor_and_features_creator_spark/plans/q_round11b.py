@@ -108,18 +108,17 @@ def graph_connected_components(spark: SparkSession,
     part key reachable in its component — the canonical deterministic
     representative, which is exactly what the oracle's recursive-CTE
     transitive closure computes, so the per-node labels hash-compare
-    directly. The Spark plan is min-label propagation with a
-    decimal-exact label-sum fixpoint probe (operators/graph.py
-    connected_components — O(diameter) rounds, one aggregated scalar
-    per round as the sanctioned collect site); the library's
-    star-contraction sibling (O(log² n) rounds, the skewed-graph scale
-    path) is pinned equivalent on chain/clique/random graphs in
-    tests/test_llm_ops.py. The closure oracle is O(Σ component²) —
-    fine on the brand-sharded fixture, which is WHY this operator runs
-    on the sparse graph and not the 91%-dense supplier fixture."""
-    from ..operators.graph import connected_components
+    directly. The Spark plan is the library's one CC operator,
+    large-star/small-star contraction (operators/graph.py
+    connected_components_star — O(log² n) rounds, or one driver finish
+    for graphs of at most LOCAL_EDGES edges), pinned against a plain
+    union-find on chain/clique/random graphs in tests/test_llm_ops.py.
+    The closure oracle is O(Σ component²) — fine on the brand-sharded
+    fixture, which is WHY this operator runs on the sparse graph and
+    not the 91%-dense supplier fixture."""
+    from ..operators.graph import connected_components_star
     e = _copurchase_edges(spark, sf_dir)
-    return connected_components(e).select(
+    return connected_components_star(e).select(
         F.col("n").alias("node"),
         F.col("cluster_id").cast("long").alias("component"))
 

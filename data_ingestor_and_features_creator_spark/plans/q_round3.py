@@ -176,7 +176,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (suppliers as negative node ids), seeded from nation-0
     customers, capped at {_BFS_MAX_LEVEL} hops — the reachability /
     shortest-hop family next to PageRank (fixed-point numeric) and
-    connected components (label propagation).
+    connected components (star contraction).
 
     Iterative frontier expansion: visited is LEFT ANTI-joined out of
     each next frontier, so a node's recorded level is its first (= min)

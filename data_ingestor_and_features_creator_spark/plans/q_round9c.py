@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.exact import DEC, dsum, dsum_sql, ln9, ln9_sql, safe_div
-from ..operators.graph import connected_components
+from ..operators.graph import connected_components_star
 from .registry import query
 
 _H = "((user_id % 1000003) * 2654435761) % 1000003 % 100"
@@ -293,7 +293,7 @@ def geo_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .select(F.col("cell").alias("a"),
                          F.col("bcell").alias("b")))
     # (n, cluster_id) for edge endpoints; isolated cores stay singletons
-    labels = (connected_components(edges)
+    labels = (connected_components_star(edges)
               .select(F.col("n").alias("cell"),
                       F.col("cluster_id").alias("cc")))
     lab = (core.join(labels, "cell", "left")

@@ -53,6 +53,15 @@ def test_measure_releases_what_the_id_pinned(spark, sf_dir):
     assert _cache_empty(spark)
 
 
+def test_measure_releases_checkpoint_blocks(spark, sf_dir):
+    # clearCache does not touch localCheckpoint blocks
+    def fn(s, d):
+        return s.range(1000).localCheckpoint().selectExpr("sum(id) AS s")
+
+    harness.measure(spark, fn, sf_dir, 1)
+    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
+
+
 @pytest.mark.parametrize("eager", [0, 3])
 def test_build_jobs_counts_only_the_jobs_run_while_building(spark, eager):
     # each collect of a range is one job; the execution of the returned

@@ -153,32 +153,62 @@ def test_data_split_hash_deterministic_and_total(spark, sf_dir):
 
 
 def test_connected_components_chain_and_isolated_clique(spark, cc_regime):
-    # chain 1-2-3-4 needs multi-round propagation; 5-6 is a separate
+    # chain 1-2-3-4 needs several contraction rounds; 5-6 is a separate
     # component; min reachable id becomes the cluster id
     from data_ingestor_and_features_creator_spark.operators import graph
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (6, 5)], "a long, b long")
     got = {r["n"]: r["cluster_id"]
-           for r in graph.connected_components(edges).collect()}
+           for r in graph.connected_components_star(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5}
 
 
 def test_connected_components_releases_its_cache(spark):
-    # the loop-invariant symmetric edge set is cached for the rounds;
-    # once the labels are checkpointed nothing may stay pinned
+    # the rounds checkpoint their edge sets; nothing may stay pinned in
+    # the caller's cache once the labels are read
     from data_ingestor_and_features_creator_spark.operators import graph
     spark.catalog.clearCache()
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (6, 5)], "a long, b long")
-    graph.connected_components(edges).collect()
+    graph.connected_components_star(edges).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_star_cc_raises_when_the_rounds_hit_the_cap(spark, monkeypatch):
+    # a 20-node chain does not reach its fixpoint in one round: the
+    # operator must say so instead of returning the half-contracted
+    # edge set as labels
+    from data_ingestor_and_features_creator_spark.operators import graph
+    monkeypatch.setattr(graph, "LOCAL_EDGES", 0)
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
+    edges = spark.createDataFrame([(i, i + 1) for i in range(19)],
+                                  "a long, b long")
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        graph.connected_components_star(edges)
 
 
 def _cc_map(df):
     return {r["n"]: r["cluster_id"] for r in df.collect()}
 
 
+def _union_find(pairs):
+    """{node: min node of its component} by a plain union-find."""
+    par = {}
+
+    def find(x):
+        while par.setdefault(x, x) != x:
+            x = par[x]
+        return x
+
+    for x, y in pairs:
+        rx, ry = find(x), find(y)
+        par[max(rx, ry)] = min(rx, ry)
+    return {x: find(x) for x in list(par)}
+
+
 def test_star_cc_equals_label_propagation(spark, cc_regime):
+    """Star contraction against the min-label fixpoint computed by a
+    plain union-find."""
     from data_ingestor_and_features_creator_spark.operators import graph
     rng = np.random.default_rng(11)
     # chain (worst diameter for propagation), clique, random pairs
@@ -187,9 +217,8 @@ def test_star_cc_equals_label_propagation(spark, cc_regime):
     rand = [(int(a), int(b)) for a, b in rng.integers(200, 240, (30, 2))
             if a != b]
     edges = spark.createDataFrame(chain + clique + rand, "a long, b long")
-    lp = _cc_map(graph.connected_components(edges))
     star = _cc_map(graph.connected_components_star(edges))
-    assert lp == star
+    assert star == _union_find(chain + clique + rand)
     assert star[19] == 0 and star[104] == 100  # chain and clique roots
 
 
@@ -204,57 +233,39 @@ def test_driver_labels_match_union_find():
                  (rng.integers(0, 3000, 3000), rng.integers(0, 3000, 3000)),
                  (np.arange(3000), np.arange(3000) // 8 * 8
                   + rng.integers(0, 8, 3000))]:
-        par = {}
-
-        def find(x):
-            while par.setdefault(x, x) != x:
-                x = par[x]
-            return x
-
-        for x, y in zip(a.tolist(), b.tolist()):
-            rx, ry = find(x), find(y)
-            par[max(rx, ry)] = min(rx, ry)
         t = graph._min_labels(pa.table({"a": a, "b": b}))
         assert dict(zip(t.column("n").to_pylist(),
-                        t.column("cluster_id").to_pylist())) == {
-            x: find(x) for x in list(par)}
+                        t.column("cluster_id").to_pylist())) == _union_find(
+            zip(a.tolist(), b.tolist()))
 
 
-# (rows, DDL, labels from connected_components, labels from
-# connected_components_star): label propagation labels a self-loop-only
-# node and a null endpoint; star contraction drops both.
+# (rows, DDL, labels): star contraction drops a self-loop-only node and
+# null endpoints.
 _REGIME_GRAPHS = {
-    "empty": ([], "a long, b long", {}, {}),
+    "empty": ([], "a long, b long", {}),
     "self_loop_only_node": (
-        [(1, 2), (2, 3), (7, 7)], "a long, b long",
-        {1: 1, 2: 1, 3: 1, 7: 7}, {1: 1, 2: 1, 3: 1}),
+        [(1, 2), (2, 3), (7, 7)], "a long, b long", {1: 1, 2: 1, 3: 1}),
     "int_endpoints": (
         [(2, 1), (3, 2), (9, 8), (8, 9), (4, 5)], "a int, b int",
-        {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 8: 8, 9: 8},
         {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 8: 8, 9: 8}),
     "null_endpoints": (
         [(2, 1), (2, None), (None, 5), (None, None), (9, 8)],
-        "a long, b long",
-        {1: 1, 2: 1, 5: 5, 8: 8, 9: 8, None: None},
-        {1: 1, 2: 1, 8: 8, 9: 8}),
+        "a long, b long", {1: 1, 2: 1, 8: 8, 9: 8}),
 }
 
 
-@pytest.mark.parametrize("fn", ["connected_components",
-                                "connected_components_star"])
+@pytest.mark.parametrize("fn", ["connected_components_star"])
 @pytest.mark.parametrize("case", sorted(_REGIME_GRAPHS))
 def test_cc_regimes_agree_at_the_bound(spark, monkeypatch, case, fn):
     """Same labels and output schema whether the graph just fits the
     driver finish (bound = |E|) or just misses it (|E| - 1, where every
     round runs distributed)."""
     from data_ingestor_and_features_creator_spark.operators import graph
-    rows, ddl, lp, star = _REGIME_GRAPHS[case]
+    rows, ddl, want = _REGIME_GRAPHS[case]
     edges = spark.createDataFrame(rows, ddl)
-    # |E| as each algorithm counts it: the input rows for label
-    # propagation, the distinct non-loop canonical edges for star
-    m = (len(rows) if fn == "connected_components" else
-         len({(max(a, b), min(a, b)) for a, b in rows
-              if None not in (a, b) and a != b}))
+    # |E| as star counts it: the distinct non-loop canonical edges
+    m = len({(max(a, b), min(a, b)) for a, b in rows
+             if None not in (a, b) and a != b})
     finishes = []
     solve = graph._min_labels
     monkeypatch.setattr(graph, "_min_labels",
@@ -267,7 +278,7 @@ def test_cc_regimes_agree_at_the_bound(spark, monkeypatch, case, fn):
         got[bound], calls[bound] = (df.schema, _cc_map(df)), len(finishes)
     assert calls == {m: 1, m - 1: 0}
     assert got[m] == got[m - 1]
-    assert got[m][1] == (lp if fn == "connected_components" else star)
+    assert got[m][1] == want
     assert [f.dataType.simpleString() for f in got[m][0]] == (
         ["int", "int"] if case == "int_endpoints" else ["bigint", "bigint"])
 

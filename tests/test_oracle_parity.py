@@ -31,6 +31,27 @@ def test_sql_oracle_parity(name, spark, duck, sf_dir):
                        duck_cols, duck_rows)
 
 
+# Every id labeled by connected_components_star. At the test scale their
+# graphs fit the driver finish, so the parity test above never runs the
+# distributed rounds on an id's own graph.
+CC_IDS = ["dedup_cluster_cc", "dedup_cluster_cc_star", "dedup_minhash_cluster",
+          "dedup_semantic_cluster", "graph_connected_components",
+          "geo_grid_dbscan"]
+
+
+@pytest.mark.parametrize("name", CC_IDS)
+def test_cc_oracle_parity_in_distributed_regime(name, spark, duck, sf_dir,
+                                                monkeypatch):
+    from data_ingestor_and_features_creator_spark.operators import graph
+
+    def no_driver_finish(t):
+        raise AssertionError(f"{name}: an empty graph never runs the rounds")
+
+    monkeypatch.setattr(graph, "LOCAL_EDGES", 0)
+    monkeypatch.setattr(graph, "_min_labels", no_driver_finish)
+    test_sql_oracle_parity(name, spark, duck, sf_dir)
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY_IDS)
 def test_rows_only_runs(name, spark, sf_dir):
     """Rows-only ops must at least execute and return a stable schema."""

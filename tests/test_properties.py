@@ -82,7 +82,10 @@ def test_poincare_sd1_equals_rotated_definition(spark, nn):
     assert row["sd1"] == pytest.approx(sd1_rot, rel=1e-5, abs=1e-6)
 
 
-@given(st.lists(st.floats(min_value=-1, max_value=1, allow_nan=False),
+# width=32: the column is array<float>, so a nonzero double that rounds
+# to 0.0 in float32 would make an all-zero vector
+@given(st.lists(st.floats(min_value=-1, max_value=1, allow_nan=False,
+                          width=32),
                 min_size=4, max_size=16).filter(lambda v: any(x != 0 for x in v)))
 @SETTINGS
 def test_cosine_self_similarity_is_one(spark, vec):
