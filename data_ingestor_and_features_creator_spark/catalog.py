@@ -7,14 +7,10 @@ column pruning / predicate pushdown operate against a stable schema.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import TABLE_NAMES
 from .sources import parquet_table
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

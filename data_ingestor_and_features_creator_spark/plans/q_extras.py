@@ -1,6 +1,6 @@
 """Late-round-2 additions: LLM-training chunking, sequence/transition
-mining, window-rank ratios, sliding distinct counts, deterministic mode,
-and the TINN geometrical feature.
+mining, window-rank ratios, sliding distinct counts and deterministic
+mode.
 
 Registered AFTER every other module on purpose: the driver verifies a
 ~50-query prefix of the priority order (plans/__init__.py), and that
@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..features import kernels
 from .registry import query
 
 
@@ -671,83 +670,3 @@ def udf_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id")
     return ev.groupBy("user_id").applyInArrow(
         _arrow_group_stats, schema="user_id long, n long, sum_event_id long")
-
-
-@query("hrv_tinn", oracle="""
-WITH b AS (
-  SELECT user_id AS record_id,
-         CAST(FLOOR(value / 7.8125) AS BIGINT) AS bin, COUNT(*) AS c
-  FROM events WHERE value > 0 AND NOT isnan(value)
-  GROUP BY record_id, bin),
-st AS (
-  SELECT record_id,
-         CAST(COUNT(*) AS BIGINT) AS n_bins,
-         CAST(MAX(bin) - MIN(bin) + 1 AS BIGINT) AS bin_span,
-         MIN(bin) AS lo, MAX(bin) AS hi,
-         MIN(CASE WHEN c = mc THEN bin END) AS mode_bin
-  FROM (SELECT record_id, bin, c,
-               MAX(c) OVER (PARTITION BY record_id) AS mc FROM b)
-  GROUP BY record_id)
-SELECT record_id, n_bins, bin_span,
-       bin_span >= 3 AND mode_bin > lo AND mode_bin < hi AS computed,
-       TRUE AS tinn_in_range
-FROM st
-""")
-def hrv_tinn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TINN — baseline width of the least-squares triangular fit to the
-    NN-interval histogram (7.8125 ms bins, the 128 Hz-heritage width
-    shared with hrv_geometrical). The public hrvanalysis package
-    returns tinn=None (unimplemented); this follows the Kubios /
-    Task-Force definition instead: search (N, M) around the modal bin
-    minimizing Σ(D−q)², q the triangle 0 at N and M peaking at D(X).
-
-    O(bins²) per record inside an Arrow kernel — bounded because the
-    physiologic RR range caps the bin count (~hundreds), independent of
-    beat count; the heavy reduction (histogramming) happens FIRST via a
-    distributed groupBy so the kernel sees (record, bin, count) rows,
-    never raw beats. Known-answer-tested in
-    tests/test_hrv_known_answers.py.
-
-    Upgraded rows-only → BOUND EVAL (round 10, VERDICT r9 ask 2; the
-    O(B³) search itself is not SQL-recomputable but its guard and
-    geometry are INTEGER-exact):
-      n_bins        exact occupied-bin count (hash-strong);
-      bin_span      exact max−min+1 histogram support;
-      computed      the kernel returns a fit iff span ≥ 3 AND the
-                    (first-argmax) modal bin is interior — a mode at
-                    either support edge leaves no N (resp. M) side to
-                    search. The LIVE null-guard vs the oracle's
-                    integer re-derivation (argmax ties break to the
-                    lowest bin on both engines);
-      tinn_in_range the fitted baseline is structurally N < X < M on
-                    the bin grid ⇒ tinn ∈ [2, span−1]·7.8125 and an
-                    exact bin-width multiple (live check; TRUE when
-                    not computed).
-    The raw tinn value stays library-accessible (kernels.tinn_fit)."""
-    from .q_hrv import rr_from_events
-
-    rr = rr_from_events(spark, sf_dir)
-    binned = (rr.groupBy(
-        "record_id",
-        F.floor(F.col("rri") / F.lit(7.8125)).cast("long").alias("bin"))
-        .agg(F.count("*").alias("c"))).cache()
-    fit = binned.groupBy("record_id").applyInPandas(
-        kernels.tinn_kernel, schema=kernels.TINN_SCHEMA)
-    wmc = W.partitionBy("record_id")
-    st = (binned.withColumn("mc", F.max("c").over(wmc))
-                .groupBy("record_id")
-                .agg(F.count("*").cast("long").alias("n_bins"),
-                     (F.max("bin") - F.min("bin") + 1).cast("long")
-                      .alias("bin_span"),
-                     F.min("bin").alias("lo"), F.max("bin").alias("hi"),
-                     F.min(F.when(F.col("c") == F.col("mc"),
-                                  F.col("bin"))).alias("mode_bin")))
-    t = F.col("tinn")
-    in_range = F.when(t.isNull(), F.lit(True)).otherwise(
-        (t >= 2 * 7.8125) & (t <= (F.col("bin_span") - 1) * 7.8125)
-        & (t / 7.8125 == F.round(t / 7.8125, 0)))
-    return (fit.drop("n_bins").join(st, "record_id")
-               .select("record_id", "n_bins", "bin_span",
-                       t.isNotNull().alias("computed"),
-                       F.coalesce(in_range, F.lit(False))
-                        .alias("tinn_in_range")))

@@ -2,19 +2,24 @@
 surface over the driver's stand-in series (events: record_id=user_id,
 beat_ts=ts, rri=value; FIXTURES.md "Domain-feature fixture").
 
-Closed-form features (time-domain, Poincaré, CSI/CVI, geometrical) are
-single-pass aggregate expressions with full SQL oracles; the two
-kernel features (frequency-domain PSD, sample entropy) are
-Arrow-batched ``applyInPandas`` stages with rows-only checks, unit-
-tested against numpy reference implementations instead
-(tests/test_hrv_known_answers.py).
+Closed-form features (time-domain, Poincaré, CSI/CVI, geometrical,
+stress index, the wide all-family table) are single-pass aggregate
+expressions with full SQL oracles. The nonlinear and spectral kernels
+(Welch PSD, sample entropy, DFA, Lomb-Scargle, TINN) are Arrow-batched
+``applyInPandas`` stages that all go through ``kernel_with_stats``:
+the oracle re-derives their exact counts and guard conditions, and the
+kernel values themselves are unit-tested against numpy reference
+implementations (tests/test_hrv_known_answers.py).
 """
 
 from __future__ import annotations
 
 import math
+import operator
+from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -135,6 +140,118 @@ def hrv_geometrical(spark: SparkSession, sf_dir: str) -> DataFrame:
     heritage) — two chained hash aggregations. tinn intentionally
     omitted (see features/hrv.py docstring)."""
     return triangular_index(rr_from_events(spark, sf_dir))
+
+
+@query("hrv_stress_index", oracle="""
+WITH rr AS (
+  SELECT user_id AS record_id, value AS rri,
+         CAST(FLOOR(value / 50.0) AS BIGINT) AS bin
+  FROM events WHERE value > 0 AND NOT isnan(value)
+), h AS (
+  SELECT record_id, bin, CAST(COUNT(*) AS BIGINT) AS cnt
+  FROM rr GROUP BY record_id, bin
+), m AS (
+  SELECT record_id, bin, cnt,
+         row_number() OVER (PARTITION BY record_id
+                            ORDER BY cnt DESC, bin) AS rnk
+  FROM h
+), s AS (
+  SELECT record_id, CAST(COUNT(*) AS BIGINT) AS n,
+         MAX(rri) AS mx, MIN(rri) AS mn
+  FROM rr GROUP BY record_id
+)
+SELECT s.record_id, s.n,
+       CAST(m.bin * 0.05 + 0.025 AS DOUBLE) AS mo_s,
+       (100.0 * m.cnt / s.n) AS amo_pct,
+       ((s.mx - s.mn) / 1000.0) AS mxdmn_s,
+       CASE WHEN (m.bin * 0.05 + 0.025) * ((s.mx - s.mn) / 1000.0) > 0
+            THEN (100.0 * m.cnt / s.n)
+                 / (2.0 * (m.bin * 0.05 + 0.025) * ((s.mx - s.mn) / 1000.0))
+       END AS stress_index
+FROM s JOIN m ON s.record_id = m.record_id AND m.rnk = 1
+""")
+def hrv_stress_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Baevsky STRESS INDEX (Kubios's SI): SI = AMo / (2·Mo·MxDMn) with
+    the RR histogram binned at 50 ms — Mo the modal bin midpoint (s),
+    AMo the modal bin's share of beats (%), MxDMn the RR range (s).
+    Completes the geometrical-feature family (triangular index + TINN
+    use the 7.8125 ms histogram; SI the 50 ms one). The mode is
+    count-then-rank with a deterministic (count desc, bin) tiebreak —
+    the agg_mode pattern: the rank stage sees one row per (record,
+    bin), never raw beats — and everything else is one aggregate over
+    the same (record) partitioning. All derivations are IEEE arithmetic
+    on identical operands (FLOOR bins exact on doubles), so the result
+    ships UNROUNDED; degenerate records (constant RR → MxDMn = 0) yield
+    NULL via the guard instead of faulting ANSI division."""
+    ev = (load_table(spark, sf_dir, "events").filter((F.col("value") > 0) & ~F.isnan("value"))
+          .select(F.col("user_id").alias("record_id"),
+                  F.col("value").alias("rri"),
+                  F.floor(F.col("value") / 50.0).cast("long").alias("bin")))
+    h = ev.groupBy("record_id", "bin").agg(F.count(F.lit(1)).alias("cnt"))
+    w = W.partitionBy("record_id").orderBy(F.desc("cnt"), "bin")
+    m = (h.withColumn("rnk", F.row_number().over(w))
+          .filter(F.col("rnk") == 1).select("record_id", "bin", "cnt"))
+    s = ev.groupBy("record_id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max("rri").alias("mx"), F.min("rri").alias("mn"))
+    mo_s = F.col("bin") * 0.05 + 0.025
+    amo = 100.0 * F.col("cnt") / F.col("n")
+    mxdmn = (F.col("mx") - F.col("mn")) / 1000.0
+    return (s.join(m, "record_id")
+             .select("record_id", "n",
+                     mo_s.alias("mo_s"), amo.alias("amo_pct"),
+                     mxdmn.alias("mxdmn_s"),
+                     F.when(mo_s * mxdmn > 0,
+                            amo / (2.0 * mo_s * mxdmn))
+                      .alias("stress_index")))
+
+
+@query("hrv_features_wide", oracle=f"""{_RR_CTE},
+agg AS (
+  SELECT record_id,
+    CAST(COUNT(rri) AS BIGINT) AS n_beats,
+    {r6_sql(_MEAN)} AS mean_nni,
+    {r6_sql(safe_sqrt_sql(_VAR_NNI))} AS sdnn,
+    {r6_sql(f'SQRT({_MEAN_D2})')} AS rmssd,
+    {r6_sql(f'100.0 * SUM(CASE WHEN ABS(d) > 50 THEN 1 ELSE 0 END) / {_N}')}
+      AS pnni_50,
+    {r6_sql(_SD1)} AS sd1,
+    {r6_sql(_SD2)} AS sd2,
+    {r6_sql(f'(4*{_SD2}) / (4*{_SD1})')} AS csi
+  FROM rr GROUP BY record_id),
+b AS (
+  SELECT user_id AS record_id,
+         CAST(FLOOR(value / 7.8125) AS BIGINT) AS bin, COUNT(*) AS c
+  FROM events WHERE value > 0 AND NOT isnan(value) GROUP BY record_id, bin),
+tri AS (
+  SELECT record_id, {r6_sql('CAST(SUM(c) AS DOUBLE) / MAX(c)')}
+           AS triangular_index
+  FROM b GROUP BY record_id)
+SELECT agg.*, tri.triangular_index
+FROM agg JOIN tri USING (record_id)
+""")
+def hrv_features_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """THE WIDE FEATURE TABLE — the features_creator's actual
+    deliverable: every closed-form HRV family (time-domain moments,
+    Poincaré sd1/sd2, CSI, triangular index) for every record in ONE
+    model-ready row. Plan shape is the point: time-domain + Poincaré
+    + CSI are ALL aggregate expressions over the same (rri, diff)
+    pass, so they collapse into a SINGLE hash aggregate — one beat
+    scan, one exchange of map-side partials, n−1 families for free;
+    only the histogram-based triangular index needs its own two-level
+    aggregation, joined back broadcast on the tiny per-record key.
+    Representative columns per family keep the row honest (full
+    16-column time-domain detail lives in hrv_time_domain). Compare
+    the reference's one-python-pass-per-family loop."""
+    rr = with_diff(rr_from_events(spark, sf_dir), tiebreak_col="event_id")
+    agg = (rr.groupBy("record_id")
+             .agg(F.count("rri").cast("long").alias("n_beats"),
+                  *time_domain_exprs_by_name(
+                      ["mean_nni", "sdnn", "rmssd", "pnni_50"]),
+                  *poincare_exprs()[:2],  # sd1, sd2
+                  *csi_cvi_exprs()[:1]))  # csi
+    tri = triangular_index(rr_from_events(spark, sf_dir))
+    return agg.join(F.broadcast(tri), "record_id")
 
 
 _Q15 = 900_000_000  # 15 min in µs
@@ -338,6 +455,94 @@ st AS (
 """
 
 
+def kernel_with_stats(rows: DataFrame, planted: list[DataFrame],
+                      keys: list[str], kernel: Callable, schema: str,
+                      stats: list[Column]) -> DataFrame:
+    """The bound-eval shape of every Arrow-kernel id: the grouped
+    ``kernel`` (output ``schema``) joined on ``keys`` to the exact
+    ``stats`` aggregates, over ``rows`` plus the ``planted`` frames.
+
+    Both branches read ONE ``filter(keys IS NOT NULL).repartition(*keys)``
+    of that input, so their subtrees are identical and AQE reuses a
+    single exchange: the events are scanned once, and no cache is
+    needed to share them (a cached input or kernel output stays pinned
+    until someone clears it). This holds only while ``stats`` read every
+    column the kernel reads: Catalyst prunes each branch to the columns
+    it uses, and a narrower stats branch scans its own relation. An id
+    whose only stat would be the row count passes no ``stats`` and gets
+    the kernel output alone, whose row count is exact too.
+
+    The non-null filter states what the final inner join infers anyway,
+    since a null key never survives it; written below the repartition
+    it keeps the two subtrees byte-identical, where the opaque kernel
+    node would otherwise keep the inferred filter from reaching the
+    kernel side's scan. The kernel reads its columns by name, so a
+    column only the stats need rides through Arrow unused. A kernel
+    column that ``stats`` also emits (its row count) is dropped: the
+    exact aggregate wins."""
+    allrr = (reduce(DataFrame.unionByName, planted, rows)
+             .filter(reduce(operator.and_,
+                            [F.col(k).isNotNull() for k in keys]))
+             .repartition(*keys))
+    feats = allrr.groupBy(*keys).applyInPandas(kernel, schema=schema)
+    if not stats:
+        return feats
+    st = allrr.groupBy(*keys).agg(*stats)
+    return feats.drop(*[c for c in st.columns if c not in keys]).join(st, keys)
+
+
+def planted_pair(planted: list[DataFrame], ids: tuple[int, int],
+                 kernel: Callable, schema: str, col: str) -> DataFrame:
+    """One row ``(lo, hi)``: the kernel's ``col`` on planted record
+    ``ids[0]`` and on ``ids[1]``, from a kernel run over the ``planted``
+    frames alone (a few hundred literal rows). An ordering claim
+    between the pair reads this row, so the main kernel runs once."""
+    out = (reduce(DataFrame.unionByName, planted).groupBy("record_id")
+           .applyInPandas(kernel, schema=schema))
+    lo_id, hi_id = ids
+    return out.agg(
+        F.max(F.when(F.col("record_id") == lo_id, F.col(col))).alias("lo"),
+        F.max(F.when(F.col("record_id") == hi_id, F.col(col))).alias("hi"))
+
+
+def _kernel_n_beats() -> Column:
+    """The kernel's own row count as ``n_beats``, for an id with no
+    stats branch. Never NULL; the coalesce types it NOT NULL, as an
+    aggregate count is."""
+    return F.coalesce(F.col("n_beats"), F.lit(0)).alias("n_beats")
+
+
+def _welch_stats() -> list[Column]:
+    """Guard stats of the Welch kernels: exact count, decimal-exact
+    Σrri, max rri and the first beat's rri (min_by picks it in the
+    aggregate, no per-group sort)."""
+    return [F.count("rri").cast("long").alias("n_beats"),
+            dsum("rri").alias("s"),
+            F.max("rri").alias("mx"),
+            F.min_by("rri", F.struct("beat_ts", "event_id"))
+             .alias("first_rri")]
+
+
+def _welch_claims() -> tuple[Column, Column]:
+    """``computed_ok`` and ``internal_ok`` of the Welch kernels over
+    ``_welch_stats`` (see hrv_freq_domain's docstring)."""
+    grid_est = F.ceil((F.col("s") - F.col("first_rri")) / F.lit(250.0))
+    guard = F.ceil(F.col("mx") / F.lit(250.0)) + F.lit(2)
+    tp = F.col("total_power")
+    computed_ok = (
+        F.when(F.col("n_beats") < 16, tp.isNull())
+         .when(grid_est >= 32 + guard, tp.isNotNull())
+         .when(grid_est <= 32 - guard, tp.isNull())
+         .otherwise(F.lit(True)))
+    internal_ok = F.when(tp.isNull(), F.lit(True)).otherwise(
+        (tp == F.col("vlf") + F.col("lf") + F.col("hf"))
+        & (F.col("vlf") >= 0) & (F.col("lf") >= 0) & (F.col("hf") >= 0)
+        & F.coalesce(F.abs(F.col("lfnu") + F.col("hfnu") - 100.0) < 1e-9,
+                     F.lit(True)))
+    return (computed_ok.alias("computed_ok"),
+            F.coalesce(internal_ok, F.lit(False)).alias("internal_ok"))
+
+
 @query("hrv_freq_domain", oracle=f"""
 WITH rr AS ({_RR4}),
 {_FREQ_ST}
@@ -370,64 +575,19 @@ def hrv_freq_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     A kernel regression flips a boolean and hash-mismatches; raw band
     powers stay library-accessible (kernels.freq_domain_kernel) and
     known-answer-tested."""
-    rr = rr_from_events(spark, sf_dir).select(
-        "record_id", "beat_ts", "event_id", "rri")
-    # Round 12 (guide §2.4): ONE events scan instead of two. The Welch
-    # kernel branch and the guard-stats branch both need the rows
-    # clustered by record_id; an explicit repartition makes the two
-    # subtrees share a single exchange (and therefore a single parquet
-    # scan) via exchange reuse — before, each branch re-scanned events
-    # behind its own shuffle. The kernel reads its columns by name, so
-    # the extra event_id column riding through Arrow (needed only by
-    # the stats side's min_by tiebreak) is ignored there; every claim
-    # column is invariant to intra-group row order by construction.
-    # The explicit isNotNull mirrors what the final inner join infers
-    # anyway (a null record_id can never survive it) — stating it
-    # below the repartition keeps BOTH branch subtrees byte-identical
-    # so the exchange-reuse actually fires (the opaque kernel node
-    # blocks the inferred filter from reaching the feats-side scan
-    # otherwise, and one differing PushedFilter kills the reuse).
-    allrr = (rr.unionByName(planted_sin(spark, -101, 0.10))
-               .unionByName(planted_sin(spark, -102, 0.30))
-               .filter(F.col("record_id").isNotNull())
-               .repartition("record_id"))
-    feats = (allrr.groupBy("record_id")
-                  .applyInPandas(kernels.freq_domain_kernel,
-                                 schema=kernels.FREQ_SCHEMA))
-    # ONE hash aggregate — min_by picks the first beat's rri without a
-    # per-record sort (round 10: the row_number construction paid a
-    # full window exchange just for this scalar).
-    stats = allrr.groupBy("record_id").agg(
-        F.count("rri").cast("long").alias("n_beats"),
-        dsum("rri").alias("s"),
-        F.max("rri").alias("mx"),
-        F.min_by("rri", F.struct("beat_ts", "event_id"))
-         .alias("first_rri"))
-    grid_est = F.ceil((F.col("s") - F.col("first_rri")) / F.lit(250.0))
-    guard = F.ceil(F.col("mx") / F.lit(250.0)) + F.lit(2)
-    tp = F.col("total_power")
-    computed_ok = (
-        F.when(F.col("n_beats") < 16, tp.isNull())
-         .when(grid_est >= 32 + guard, tp.isNotNull())
-         .when(grid_est <= 32 - guard, tp.isNull())
-         .otherwise(F.lit(True)))
-    internal_ok = F.when(tp.isNull(), F.lit(True)).otherwise(
-        (tp == F.col("vlf") + F.col("lf") + F.col("hf"))
-        & (F.col("vlf") >= 0) & (F.col("lf") >= 0) & (F.col("hf") >= 0)
-        & F.coalesce(F.abs(F.col("lfnu") + F.col("hfnu") - 100.0) < 1e-9,
-                     F.lit(True)))
+    j = kernel_with_stats(
+        rr_from_events(spark, sf_dir),
+        [planted_sin(spark, -101, 0.10), planted_sin(spark, -102, 0.30)],
+        ["record_id"], kernels.freq_domain_kernel, kernels.FREQ_SCHEMA,
+        _welch_stats())
     band_ok = (
         F.when(F.col("record_id") == -101,
                F.coalesce(F.col("lf") > 5 * F.col("hf"), F.lit(False)))
          .when(F.col("record_id") == -102,
                F.coalesce(F.col("hf") > 5 * F.col("lf"), F.lit(False)))
          .otherwise(F.lit(True)))
-    return (feats.drop("n_beats").join(stats, "record_id")
-                 .select("record_id", "n_beats",
-                         computed_ok.alias("computed_ok"),
-                         F.coalesce(internal_ok, F.lit(False))
-                          .alias("internal_ok"),
-                         band_ok.alias("band_ok")))
+    return j.select("record_id", "n_beats", *_welch_claims(),
+                    band_ok.alias("band_ok"))
 
 
 _SAMPEN_CAP = 2000  # O(n²) kernel input bound per record (see docstring)
@@ -482,8 +642,7 @@ def hrv_sampen(spark: SparkSession, sf_dir: str) -> DataFrame:
                      SampEn(noise), the regularity ordering the
                      statistic exists to measure (checked on the
                      planted pair, TRUE elsewhere)."""
-    rr = rr_from_events(spark, sf_dir).select(
-        "record_id", "beat_ts", "event_id", "rri")
+    rr = rr_from_events(spark, sf_dir)
     # The upstream bound the docstring demands, IN the plan: SampEn
     # runs over ≤ _SAMPEN_CAP beats per record taken at a DETERMINISTIC
     # STRIDE ceil(n/cap) over the (beat_ts, event_id) rank — unbiased
@@ -500,27 +659,20 @@ def hrv_sampen(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped = (rr.withColumn("rn", F.row_number().over(wcap))
                 .withColumn("n_tot", F.count(F.lit(1)).over(wtot))
                 .filter((F.col("rn") - 1) % stride == 0))
-    allrr = (capped.select("record_id", "beat_ts", "rri")
-             .unionByName(planted_periodic(spark, -401, 200)
-                          .select("record_id", "beat_ts", "rri"))
-             .unionByName(planted_noise(spark, -402, 200)
-                          .select("record_id", "beat_ts", "rri"))).cache()
-    # feats cached too (ADVICE r10): it feeds BOTH the planted-pair
-    # aggregate and the main join — uncached, the O(n²) Arrow kernel
-    # would execute twice per run.
-    feats = (allrr.groupBy("record_id")
-                  .applyInPandas(kernels.sampen_kernel,
-                                 schema=kernels.SAMPEN_SCHEMA)).cache()
-    stats = allrr.groupBy("record_id").agg(
-        F.count("rri").cast("long").alias("n_beats"),
-        F.countDistinct("rri").alias("nd"))
-    pair = (feats.filter(F.col("record_id").isin(-401, -402))
-                 .agg(F.max(F.when(F.col("record_id") == -401,
-                                   F.col("sampen"))).alias("se_per"),
-                      F.max(F.when(F.col("record_id") == -402,
-                                   F.col("sampen"))).alias("se_noise")))
-    j = (feats.drop("n_beats").join(stats, "record_id")
-              .crossJoin(F.broadcast(pair)))
+    # The stats read no beat_ts, so their branch repartitions narrower
+    # rows of its own; both branches still share the cap windows'
+    # exchange, so the events are scanned once.
+    cols = ["record_id", "beat_ts", "rri"]
+    planted = [planted_periodic(spark, -401, 200).select(cols),
+               planted_noise(spark, -402, 200).select(cols)]
+    j = (kernel_with_stats(
+            capped.select(cols), planted, ["record_id"],
+            kernels.sampen_kernel, kernels.SAMPEN_SCHEMA,
+            [F.count("rri").cast("long").alias("n_beats"),
+             F.countDistinct("rri").alias("nd")])
+         .crossJoin(F.broadcast(planted_pair(
+             planted, (-401, -402), kernels.sampen_kernel,
+             kernels.SAMPEN_SCHEMA, "sampen"))))
     se = F.col("sampen")
     nonneg_ok = F.when(se.isNull(), F.lit(True)).otherwise(se >= 0)
     null_guard_ok = F.when(
@@ -528,12 +680,207 @@ def hrv_sampen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(True))
     ordering_ok = F.when(
         F.col("record_id").isin(-401, -402),
-        F.coalesce(F.col("se_per") < F.col("se_noise"), F.lit(False))
+        F.coalesce(F.col("lo") < F.col("hi"), F.lit(False))
     ).otherwise(F.lit(True))
     return j.select("record_id", "n_beats",
                     nonneg_ok.alias("nonneg_ok"),
                     null_guard_ok.alias("null_guard_ok"),
                     ordering_ok.alias("ordering_ok"))
+
+
+@query("hrv_dfa", oracle="""
+WITH rr AS (
+  SELECT user_id AS record_id, value AS rri
+  FROM events WHERE value > 0 AND NOT isnan(value)),
+st AS (
+  SELECT record_id, CAST(COUNT(rri) AS BIGINT) AS n_beats,
+         COUNT(DISTINCT rri) AS nd
+  FROM rr GROUP BY record_id)
+SELECT record_id, n_beats,
+       n_beats >= 32 AND nd > 1 AS computed,
+       TRUE AS physics_ok, TRUE AS ordering_ok
+FROM st
+UNION ALL SELECT -201, 512, TRUE, TRUE, TRUE
+UNION ALL SELECT -202, 512, TRUE, TRUE, TRUE
+""")
+def hrv_dfa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Detrended fluctuation analysis α1 per record (Peng et al.; the
+    nonlinear HRV index nolds/Kubios report alongside SampEn) — box
+    sizes 4..16 beats, least-squares detrend per box, log-log slope.
+    Arrow `applyInPandas` per record with a 3-column pre-select (house
+    rule: UDF input pruned so the scan stays narrow); the kernel is
+    O(N·|boxes|) vectorized numpy. At 100 TB run per (record, bounded
+    window) like the sliding HRV plans, never per unbounded record.
+
+    Upgraded rows-only → BOUND EVAL (round 10, VERDICT r9 ask 2): the
+    live kernel runs over real records PLUS a planted white-noise
+    record (−201, iid uniform → α≈0.5) and its integrated/Brownian
+    twin (−202, cumsum of the SAME noise → α≈1.5), emitting
+      n_beats      exact count;
+      computed     the kernel's guard re-derived exactly: α is defined
+                   iff n ≥ 2·max(box)=32 and the series is
+                   non-constant (a constant series integrates to a
+                   line every box detrends to zero residual);
+      physics_ok   planted ranges α∈(0.2,0.8) white / (1.2,1.8)
+                   Brownian — the canonical DFA signatures;
+      ordering_ok  α(white) < α(Brownian) — integration steepens the
+                   fluctuation scaling, checked on the planted pair
+                   through the SAME distributed path."""
+    cols = ["record_id", "beat_ts", "rri"]
+    planted = [planted_noise(spark, -201, 512).select(cols),
+               planted_noise(spark, -202, 512, integrate=True).select(cols)]
+    j = (kernel_with_stats(
+            rr_from_events(spark, sf_dir).select(cols), planted,
+            ["record_id"], kernels.dfa_kernel, kernels.DFA_SCHEMA, [])
+         .crossJoin(F.broadcast(planted_pair(
+             planted, (-201, -202), kernels.dfa_kernel, kernels.DFA_SCHEMA,
+             "dfa_alpha1"))))
+    a = F.col("dfa_alpha1")
+    physics_ok = (
+        F.when(F.col("record_id") == -201,
+               F.coalesce((a > 0.2) & (a < 0.8), F.lit(False)))
+         .when(F.col("record_id") == -202,
+               F.coalesce((a > 1.2) & (a < 1.8), F.lit(False)))
+         .otherwise(F.lit(True)))
+    ordering_ok = F.when(
+        F.col("record_id").isin(-201, -202),
+        F.coalesce(F.col("lo") < F.col("hi"), F.lit(False))
+    ).otherwise(F.lit(True))
+    return j.select("record_id", _kernel_n_beats(),
+                    a.isNotNull().alias("computed"),
+                    physics_ok.alias("physics_ok"),
+                    ordering_ok.alias("ordering_ok"))
+
+
+@query("hrv_lomb_scargle", oracle="""
+WITH rr AS (
+  SELECT user_id AS record_id, value AS rri
+  FROM events WHERE value > 0 AND NOT isnan(value)),
+st AS (
+  SELECT record_id, CAST(COUNT(rri) AS BIGINT) AS n_beats
+  FROM rr GROUP BY record_id)
+SELECT record_id, n_beats,
+       n_beats >= 16 AS computed,
+       TRUE AS internal_ok, TRUE AS band_ok
+FROM st
+UNION ALL SELECT -301, 256, TRUE, TRUE, TRUE
+UNION ALL SELECT -302, 256, TRUE, TRUE, TRUE
+""")
+def hrv_lomb_scargle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lomb-Scargle LF/HF band powers per record — the PSD estimator
+    that works DIRECTLY on unevenly-sampled beat times (no 4 Hz
+    resampling step), which is the physiologically faithful
+    frequency-domain method for RR series; hrvanalysis exposes the same
+    choice via its `psd_method='lomb'` [PK:high]. Classical normalized
+    periodogram (Press-Rybicki τ form) vectorized over the frequency
+    grid.
+
+    Upgraded rows-only → BOUND EVAL (round 10): the live kernel runs
+    over real records PLUS two planted sinusoid records (−301 at
+    0.10 Hz = LF, −302 at 0.30 Hz = HF), emitting
+      n_beats      exact count;
+      computed     the kernel's exact guard: band powers are non-NULL
+                   iff n ≥ 16 (a zero-variance series still yields a
+                   zero — not NULL — periodogram);
+      internal_ok  the normalized periodogram is a sum of squares ⇒
+                   lf ≥ 0 ∧ hf ≥ 0, and lf_hf = lf/hf when hf > 0;
+      band_ok      planted physics: the LF-planted record's lf must
+                   exceed 5·hf and vice versa — uneven-sampling
+                   spectral estimation proven through the SAME
+                   distributed path the real records take."""
+    cols = ["record_id", "beat_ts", "rri"]
+    j = kernel_with_stats(
+        rr_from_events(spark, sf_dir).select(cols),
+        [planted_sin(spark, -301, 0.10).select(cols),
+         planted_sin(spark, -302, 0.30).select(cols)],
+        ["record_id"], kernels.lomb_kernel, kernels.LOMB_SCHEMA, [])
+    lf, hf = F.col("lf_lomb"), F.col("hf_lomb")
+    internal_ok = F.when(lf.isNull(), F.lit(True)).otherwise(
+        (lf >= 0) & (hf >= 0)
+        & F.coalesce(F.abs(F.col("lf_hf_lomb") - lf / hf) < 1e-9,
+                     F.lit(True)))
+    band_ok = (
+        F.when(F.col("record_id") == -301,
+               F.coalesce(lf > 5 * hf, F.lit(False)))
+         .when(F.col("record_id") == -302,
+               F.coalesce(hf > 5 * lf, F.lit(False)))
+         .otherwise(F.lit(True)))
+    return j.select("record_id", _kernel_n_beats(),
+                    lf.isNotNull().alias("computed"),
+                    F.coalesce(internal_ok, F.lit(False))
+                     .alias("internal_ok"),
+                    band_ok.alias("band_ok"))
+
+
+@query("hrv_tinn", oracle="""
+WITH b AS (
+  SELECT user_id AS record_id,
+         CAST(FLOOR(value / 7.8125) AS BIGINT) AS bin, COUNT(*) AS c
+  FROM events WHERE value > 0 AND NOT isnan(value)
+  GROUP BY record_id, bin),
+st AS (
+  SELECT record_id,
+         CAST(COUNT(*) AS BIGINT) AS n_bins,
+         CAST(MAX(bin) - MIN(bin) + 1 AS BIGINT) AS bin_span,
+         MIN(bin) AS lo, MAX(bin) AS hi,
+         MIN(CASE WHEN c = mc THEN bin END) AS mode_bin
+  FROM (SELECT record_id, bin, c,
+               MAX(c) OVER (PARTITION BY record_id) AS mc FROM b)
+  GROUP BY record_id)
+SELECT record_id, n_bins, bin_span,
+       bin_span >= 3 AND mode_bin > lo AND mode_bin < hi AS computed,
+       TRUE AS tinn_in_range
+FROM st
+""")
+def hrv_tinn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TINN — baseline width of the least-squares triangular fit to the
+    NN-interval histogram (7.8125 ms bins, the 128 Hz-heritage width
+    shared with hrv_geometrical). The public hrvanalysis package
+    returns tinn=None (unimplemented); this follows the Kubios /
+    Task-Force definition instead: search (N, M) around the modal bin
+    minimizing Σ(D−q)², q the triangle 0 at N and M peaking at D(X).
+
+    O(bins²) per record inside an Arrow kernel — bounded because the
+    physiologic RR range caps the bin count (~hundreds), independent of
+    beat count; the heavy reduction (histogramming) happens FIRST via a
+    distributed groupBy so the kernel sees (record, bin, count) rows,
+    never raw beats. Known-answer-tested in
+    tests/test_hrv_known_answers.py.
+
+    Upgraded rows-only → BOUND EVAL (round 10, VERDICT r9 ask 2; the
+    O(B³) search itself is not SQL-recomputable but its guard and
+    geometry are INTEGER-exact):
+      n_bins        exact occupied-bin count (hash-strong);
+      bin_span      exact max−min+1 histogram support;
+      computed      the kernel returns a fit iff span ≥ 3 AND the
+                    (first-argmax) modal bin is interior — a mode at
+                    either support edge leaves no N (resp. M) side to
+                    search. The LIVE null-guard vs the oracle's
+                    integer re-derivation (argmax ties break to the
+                    lowest bin on both engines);
+      tinn_in_range the fitted baseline is structurally N < X < M on
+                    the bin grid ⇒ tinn ∈ [2, span−1]·7.8125 and an
+                    exact bin-width multiple (live check; TRUE when
+                    not computed).
+    The raw tinn value stays library-accessible (kernels.tinn_fit)."""
+    binned = (rr_from_events(spark, sf_dir).groupBy(
+        "record_id",
+        F.floor(F.col("rri") / F.lit(7.8125)).cast("long").alias("bin"))
+        .agg(F.count("*").alias("c")))
+    # n_bins counts the occupied bins (c > 0, which every row is): it
+    # reads c, as the kernel does, so the two branches share one input.
+    j = kernel_with_stats(
+        binned, [], ["record_id"], kernels.tinn_kernel, kernels.TINN_SCHEMA,
+        [F.count_if(F.col("c") > 0).cast("long").alias("n_bins"),
+         (F.max("bin") - F.min("bin") + 1).cast("long").alias("bin_span")])
+    t = F.col("tinn")
+    in_range = F.when(t.isNull(), F.lit(True)).otherwise(
+        (t >= 2 * 7.8125) & (t <= (F.col("bin_span") - 1) * 7.8125)
+        & (t / 7.8125 == F.round(t / 7.8125, 0)))
+    return j.select("record_id", "n_bins", "bin_span",
+                    t.isNotNull().alias("computed"),
+                    F.coalesce(in_range, F.lit(False))
+                     .alias("tinn_in_range"))
 
 
 _PIPE_CTE = f"""
@@ -680,7 +1027,7 @@ def hrv_freq_domain_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-before-explode sliding fan-out (features/hrv.py) — the d
     column is unused here but the ws_us assignment and bounded
     explode(sequence) are identical — then one applyInPandas over
-    (record, ws) with a 3-column pre-select."""
+    (record, ws) with a 5-column pre-select."""
     rr = rr_from_events(spark, sf_dir)
     # window sized to the fixture's beat density (~2 events/day/user →
     # ~30 beats per 14 d window). Note the SYNTHETIC rri values sum to
@@ -699,33 +1046,11 @@ def hrv_freq_domain_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # or doubled window, a wrong window id, or a guard regression all
     # hash-mismatch. Planted physics lives on the per-record twin
     # (hrv_freq_domain) — this op's job is the windowed fan-out.
+    keys = ["record_id", "ws_us"]
     ex = sliding_windows(rr, width_us=_D14, stride_us=_D7,
-                         tiebreak_col="event_id").cache()
-    feats = (ex.select("record_id", "ws_us", "beat_ts", "rri")
-               .groupBy("record_id", "ws_us")
-               .applyInPandas(kernels.freq_domain_window_kernel,
-                              schema=kernels.FREQ_SLIDING_SCHEMA))
-    stats = ex.groupBy("record_id", "ws_us").agg(
-        F.count("rri").cast("long").alias("n_beats"),
-        dsum("rri").alias("s"),
-        F.max("rri").alias("mx"),
-        F.min_by("rri", F.struct("beat_ts", "event_id"))
-         .alias("first_rri"))
-    grid_est = F.ceil((F.col("s") - F.col("first_rri")) / F.lit(250.0))
-    guard = F.ceil(F.col("mx") / F.lit(250.0)) + F.lit(2)
-    tp = F.col("total_power")
-    computed_ok = (
-        F.when(F.col("n_beats") < 16, tp.isNull())
-         .when(grid_est >= 32 + guard, tp.isNotNull())
-         .when(grid_est <= 32 - guard, tp.isNull())
-         .otherwise(F.lit(True)))
-    internal_ok = F.when(tp.isNull(), F.lit(True)).otherwise(
-        (tp == F.col("vlf") + F.col("lf") + F.col("hf"))
-        & (F.col("vlf") >= 0) & (F.col("lf") >= 0) & (F.col("hf") >= 0)
-        & F.coalesce(F.abs(F.col("lfnu") + F.col("hfnu") - 100.0) < 1e-9,
-                     F.lit(True)))
-    return (feats.drop("n_beats").join(stats, ["record_id", "ws_us"])
-                 .select("record_id", "ws_us", "n_beats",
-                         computed_ok.alias("computed_ok"),
-                         F.coalesce(internal_ok, F.lit(False))
-                          .alias("internal_ok")))
+                         tiebreak_col="event_id")
+    j = kernel_with_stats(
+        ex.select(*keys, "beat_ts", "event_id", "rri"), [], keys,
+        kernels.freq_domain_window_kernel, kernels.FREQ_SLIDING_SCHEMA,
+        _welch_stats())
+    return j.select(*keys, "n_beats", *_welch_claims())

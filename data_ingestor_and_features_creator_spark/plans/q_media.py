@@ -340,18 +340,12 @@ def scan_edf_rpeaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------- HRV
 # end-to-end: container bytes → beats → features
 
-# SQL fragments for the time-domain features over the planted jittered
-# grid — same structure as plans/q_hrv.py's oracles (dsum_sql exact
-# sums; sample variance assembled from (Σx, Σx², n)).
-from ..features.hrv import time_domain_exprs_by_name  # noqa: E402
-from ..functions.exact import dsum_sql, r6_sql, safe_sqrt_sql  # noqa: E402
-
-_N = "CAST(COUNT(rri) AS DOUBLE)"
-_ND = "CAST(COUNT(d) AS DOUBLE)"
-_MEAN = f"({dsum_sql('rri')} / {_N})"
-_VAR_NNI = (f"(({dsum_sql('rri*rri')} - {dsum_sql('rri')} *"
-            f" {dsum_sql('rri')} / {_N}) / ({_N} - 1))")
-_MEAN_D2 = f"({dsum_sql('d*d')} / {_ND})"
+# The time-domain oracle over the planted jittered grid reuses
+# plans/q_hrv.py's SQL fragments (dsum_sql exact sums; sample variance
+# assembled from (Σx, Σx², n)).
+from ..features.hrv import time_domain_exprs_by_name, with_diff  # noqa: E402
+from ..functions.exact import r6_sql, safe_sqrt_sql  # noqa: E402
+from .q_hrv import _MEAN, _MEAN_D2, _VAR_NNI  # noqa: E402
 
 
 @query("hrv_from_edf", oracle=f"""
@@ -404,16 +398,14 @@ def hrv_from_edf(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandas per record (the natural ECG sharding unit), features
     are one hash aggregate — the identical plan the sf-scaling
     synthetic path (`hrv_time_domain`) benchmarks at blow-up scale."""
-    from pyspark.sql import Window as W
     sig = (_assets(spark, "holter_*.edf")
            .mapInPandas(media.edf_ecg_samples(),
                         schema=media.EDF_SAMPLES_SCHEMA))
     beats = peaks.detect_rpeaks(sig)
-    w = W.partitionBy("record_id").orderBy("peak_idx")
-    rr = (beats.select("record_id", "peak_idx",
-                       F.col("rr_ms").alias("rri"))
-                .filter(F.col("rri").isNotNull())
-                .withColumn("d", F.col("rri") - F.lag("rri").over(w)))
+    rr = with_diff(beats.select("record_id", "peak_idx",
+                                F.col("rr_ms").alias("rri"))
+                        .filter(F.col("rri").isNotNull()),
+                   ts_col="peak_idx")
     feats = time_domain_exprs_by_name(["mean_nni", "sdnn", "rmssd",
                                        "nni_50"])
     return (rr.groupBy("record_id")

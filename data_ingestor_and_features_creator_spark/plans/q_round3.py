@@ -3,8 +3,7 @@ top-k, subword-vocabulary induction, BFS reachability levels, storage
 maintenance (compaction, Z-order clustering, dynamic partition
 pruning, runtime bloom-filter joins), the Spark-4 transformWithState
 streaming surface (protobuf-gated), a real @udtf table function, XML
-round trip, n-gram eval decontamination, CEP pattern matching, DFA α1
-and Lomb-Scargle HRV kernels, the Baevsky stress index,
+round trip, n-gram eval decontamination, CEP pattern matching,
 sqrt-temperature source mixing, seasonal decomposition, and the
 end-to-end LLM data-prep composite.
 
@@ -446,153 +445,6 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HRV nonlinear kernels: DFA alpha1 and Lomb-Scargle band powers
-# ---------------------------------------------------------------------------
-
-@query("hrv_dfa", oracle="""
-WITH rr AS (
-  SELECT user_id AS record_id, value AS rri
-  FROM events WHERE value > 0 AND NOT isnan(value)),
-st AS (
-  SELECT record_id, CAST(COUNT(rri) AS BIGINT) AS n_beats,
-         COUNT(DISTINCT rri) AS nd
-  FROM rr GROUP BY record_id)
-SELECT record_id, n_beats,
-       n_beats >= 32 AND nd > 1 AS computed,
-       TRUE AS physics_ok, TRUE AS ordering_ok
-FROM st
-UNION ALL SELECT -201, 512, TRUE, TRUE, TRUE
-UNION ALL SELECT -202, 512, TRUE, TRUE, TRUE
-""")
-def hrv_dfa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Detrended fluctuation analysis α1 per record (Peng et al.; the
-    nonlinear HRV index nolds/Kubios report alongside SampEn) — box
-    sizes 4..16 beats, least-squares detrend per box, log-log slope.
-    Arrow `applyInPandas` per record with a 3-column pre-select (house
-    rule: UDF input pruned so the scan stays narrow); the kernel is
-    O(N·|boxes|) vectorized numpy. At 100 TB run per (record, bounded
-    window) like the sliding HRV plans, never per unbounded record.
-
-    Upgraded rows-only → BOUND EVAL (round 10, VERDICT r9 ask 2): the
-    live kernel runs over real records PLUS a planted white-noise
-    record (−201, iid uniform → α≈0.5) and its integrated/Brownian
-    twin (−202, cumsum of the SAME noise → α≈1.5), emitting
-      n_beats      exact count;
-      computed     the kernel's guard re-derived exactly: α is defined
-                   iff n ≥ 2·max(box)=32 and the series is
-                   non-constant (a constant series integrates to a
-                   line every box detrends to zero residual);
-      physics_ok   planted ranges α∈(0.2,0.8) white / (1.2,1.8)
-                   Brownian — the canonical DFA signatures;
-      ordering_ok  α(white) < α(Brownian) — integration steepens the
-                   fluctuation scaling, checked on the planted pair
-                   through the SAME distributed path."""
-    from .q_hrv import planted_noise, rr_from_events
-    from ..features import kernels
-    rr = rr_from_events(spark, sf_dir).select("record_id", "beat_ts", "rri")
-    allrr = (rr.unionByName(planted_noise(spark, -201, 512)
-                            .select("record_id", "beat_ts", "rri"))
-               .unionByName(planted_noise(spark, -202, 512, integrate=True)
-                            .select("record_id", "beat_ts", "rri"))).cache()
-    # feats cached (ADVICE r10): the planted-pair aggregate AND the
-    # main join both read it — uncached, the vectorized DFA kernel
-    # (and the upstream rr window chain) would run twice per action.
-    feats = allrr.groupBy("record_id").applyInPandas(
-        kernels.dfa_kernel, schema=kernels.DFA_SCHEMA).cache()
-    stats = allrr.groupBy("record_id").agg(
-        F.count("rri").cast("long").alias("n_beats"),
-        F.countDistinct("rri").alias("nd"))
-    pair = (feats.filter(F.col("record_id").isin(-201, -202))
-                 .agg(F.max(F.when(F.col("record_id") == -201,
-                                   F.col("dfa_alpha1"))).alias("a_w"),
-                      F.max(F.when(F.col("record_id") == -202,
-                                   F.col("dfa_alpha1"))).alias("a_b")))
-    j = (feats.drop("n_beats").join(stats, "record_id")
-              .crossJoin(F.broadcast(pair)))
-    a = F.col("dfa_alpha1")
-    physics_ok = (
-        F.when(F.col("record_id") == -201,
-               F.coalesce((a > 0.2) & (a < 0.8), F.lit(False)))
-         .when(F.col("record_id") == -202,
-               F.coalesce((a > 1.2) & (a < 1.8), F.lit(False)))
-         .otherwise(F.lit(True)))
-    ordering_ok = F.when(
-        F.col("record_id").isin(-201, -202),
-        F.coalesce(F.col("a_w") < F.col("a_b"), F.lit(False))
-    ).otherwise(F.lit(True))
-    return j.select("record_id", "n_beats",
-                    a.isNotNull().alias("computed"),
-                    physics_ok.alias("physics_ok"),
-                    ordering_ok.alias("ordering_ok"))
-
-
-@query("hrv_lomb_scargle", oracle="""
-WITH rr AS (
-  SELECT user_id AS record_id, value AS rri
-  FROM events WHERE value > 0 AND NOT isnan(value)),
-st AS (
-  SELECT record_id, CAST(COUNT(rri) AS BIGINT) AS n_beats
-  FROM rr GROUP BY record_id)
-SELECT record_id, n_beats,
-       n_beats >= 16 AS computed,
-       TRUE AS internal_ok, TRUE AS band_ok
-FROM st
-UNION ALL SELECT -301, 256, TRUE, TRUE, TRUE
-UNION ALL SELECT -302, 256, TRUE, TRUE, TRUE
-""")
-def hrv_lomb_scargle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lomb-Scargle LF/HF band powers per record — the PSD estimator
-    that works DIRECTLY on unevenly-sampled beat times (no 4 Hz
-    resampling step), which is the physiologically faithful
-    frequency-domain method for RR series; hrvanalysis exposes the same
-    choice via its `psd_method='lomb'` [PK:high]. Classical normalized
-    periodogram (Press-Rybicki τ form) vectorized over the frequency
-    grid.
-
-    Upgraded rows-only → BOUND EVAL (round 10): the live kernel runs
-    over real records PLUS two planted sinusoid records (−301 at
-    0.10 Hz = LF, −302 at 0.30 Hz = HF), emitting
-      n_beats      exact count;
-      computed     the kernel's exact guard: band powers are non-NULL
-                   iff n ≥ 16 (a zero-variance series still yields a
-                   zero — not NULL — periodogram);
-      internal_ok  the normalized periodogram is a sum of squares ⇒
-                   lf ≥ 0 ∧ hf ≥ 0, and lf_hf = lf/hf when hf > 0;
-      band_ok      planted physics: the LF-planted record's lf must
-                   exceed 5·hf and vice versa — uneven-sampling
-                   spectral estimation proven through the SAME
-                   distributed path the real records take."""
-    from .q_hrv import planted_sin, rr_from_events
-    from ..features import kernels
-    rr = rr_from_events(spark, sf_dir).select("record_id", "beat_ts", "rri")
-    allrr = (rr.unionByName(planted_sin(spark, -301, 0.10)
-                            .select("record_id", "beat_ts", "rri"))
-               .unionByName(planted_sin(spark, -302, 0.30)
-                            .select("record_id", "beat_ts", "rri")))
-    feats = allrr.groupBy("record_id").applyInPandas(
-        kernels.lomb_kernel, schema=kernels.LOMB_SCHEMA)
-    stats = allrr.groupBy("record_id").agg(
-        F.count("rri").cast("long").alias("n_beats"))
-    j = feats.drop("n_beats").join(stats, "record_id")
-    lf, hf = F.col("lf_lomb"), F.col("hf_lomb")
-    internal_ok = F.when(lf.isNull(), F.lit(True)).otherwise(
-        (lf >= 0) & (hf >= 0)
-        & F.coalesce(F.abs(F.col("lf_hf_lomb") - lf / hf) < 1e-9,
-                     F.lit(True)))
-    band_ok = (
-        F.when(F.col("record_id") == -301,
-               F.coalesce(lf > 5 * hf, F.lit(False)))
-         .when(F.col("record_id") == -302,
-               F.coalesce(hf > 5 * lf, F.lit(False)))
-         .otherwise(F.lit(True)))
-    return j.select("record_id", "n_beats",
-                    lf.isNotNull().alias("computed"),
-                    F.coalesce(internal_ok, F.lit(False))
-                     .alias("internal_ok"),
-                    band_ok.alias("band_ok"))
-
-
-# ---------------------------------------------------------------------------
 # Runtime bloom-filter join (shuffle-side row-level runtime filtering)
 # ---------------------------------------------------------------------------
 
@@ -877,74 +729,6 @@ def sink_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count(F.lit(1)).alias("n"),
                      F.sum(F.col("value").cast("decimal(38,12)"))
                       .cast("double").alias("total_value")))
-
-
-# ---------------------------------------------------------------------------
-# Baevsky stress index (closed-form histogram-mode feature)
-# ---------------------------------------------------------------------------
-
-@query("hrv_stress_index", oracle="""
-WITH rr AS (
-  SELECT user_id AS record_id, value AS rri,
-         CAST(FLOOR(value / 50.0) AS BIGINT) AS bin
-  FROM events WHERE value > 0 AND NOT isnan(value)
-), h AS (
-  SELECT record_id, bin, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM rr GROUP BY record_id, bin
-), m AS (
-  SELECT record_id, bin, cnt,
-         row_number() OVER (PARTITION BY record_id
-                            ORDER BY cnt DESC, bin) AS rnk
-  FROM h
-), s AS (
-  SELECT record_id, CAST(COUNT(*) AS BIGINT) AS n,
-         MAX(rri) AS mx, MIN(rri) AS mn
-  FROM rr GROUP BY record_id
-)
-SELECT s.record_id, s.n,
-       CAST(m.bin * 0.05 + 0.025 AS DOUBLE) AS mo_s,
-       (100.0 * m.cnt / s.n) AS amo_pct,
-       ((s.mx - s.mn) / 1000.0) AS mxdmn_s,
-       CASE WHEN (m.bin * 0.05 + 0.025) * ((s.mx - s.mn) / 1000.0) > 0
-            THEN (100.0 * m.cnt / s.n)
-                 / (2.0 * (m.bin * 0.05 + 0.025) * ((s.mx - s.mn) / 1000.0))
-       END AS stress_index
-FROM s JOIN m ON s.record_id = m.record_id AND m.rnk = 1
-""")
-def hrv_stress_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baevsky STRESS INDEX (Kubios's SI): SI = AMo / (2·Mo·MxDMn) with
-    the RR histogram binned at 50 ms — Mo the modal bin midpoint (s),
-    AMo the modal bin's share of beats (%), MxDMn the RR range (s).
-    Completes the geometrical-feature family (triangular index + TINN
-    use the 7.8125 ms histogram; SI the 50 ms one). The mode is
-    count-then-rank with a deterministic (count desc, bin) tiebreak —
-    the agg_mode pattern: the rank stage sees one row per (record,
-    bin), never raw beats — and everything else is one aggregate over
-    the same (record) partitioning. All derivations are IEEE arithmetic
-    on identical operands (FLOOR bins exact on doubles), so the result
-    ships UNROUNDED; degenerate records (constant RR → MxDMn = 0) yield
-    NULL via the guard instead of faulting ANSI division."""
-    ev = (load_table(spark, sf_dir, "events").filter((F.col("value") > 0) & ~F.isnan("value"))
-          .select(F.col("user_id").alias("record_id"),
-                  F.col("value").alias("rri"),
-                  F.floor(F.col("value") / 50.0).cast("long").alias("bin")))
-    h = ev.groupBy("record_id", "bin").agg(F.count(F.lit(1)).alias("cnt"))
-    w = W.partitionBy("record_id").orderBy(F.desc("cnt"), "bin")
-    m = (h.withColumn("rnk", F.row_number().over(w))
-          .filter(F.col("rnk") == 1).select("record_id", "bin", "cnt"))
-    s = ev.groupBy("record_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("rri").alias("mx"), F.min("rri").alias("mn"))
-    mo_s = F.col("bin") * 0.05 + 0.025
-    amo = 100.0 * F.col("cnt") / F.col("n")
-    mxdmn = (F.col("mx") - F.col("mn")) / 1000.0
-    return (s.join(m, "record_id")
-             .select("record_id", "n",
-                     mo_s.alias("mo_s"), amo.alias("amo_pct"),
-                     mxdmn.alias("mxdmn_s"),
-                     F.when(mo_s * mxdmn > 0,
-                            amo / (2.0 * mo_s * mxdmn))
-                      .alias("stress_index")))
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import (DEC, dsum_dec_sql, dsum_sql)
+from ..functions.exact import (DEC, dsum_dec_sql, dsum_sql, r6_sql,
+                               safe_sqrt_sql)
 from .registry import query
 
 
@@ -641,75 +642,6 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         W.partitionBy("qid").orderBy("d2", "cid"))
     return (cand.withColumn("rn", rn).filter(F.col("rn") == 1)
                 .select("qid", F.col("cid").alias("nearest_cid"), "d2"))
-
-
-# ---------------------------------------------------------------------------
-# The wide all-family HRV feature table (the features_creator deliverable)
-# ---------------------------------------------------------------------------
-
-from .q_hrv import (_MEAN, _MEAN_D2, _N, _RR_CTE, _SD1, _SD2,  # noqa: E402
-                    _VAR_NNI)
-from ..functions.exact import r6_sql, safe_sqrt_sql  # noqa: E402
-
-
-@query("hrv_features_wide", oracle=f"""{_RR_CTE},
-agg AS (
-  SELECT record_id,
-    CAST(COUNT(rri) AS BIGINT) AS n_beats,
-    {r6_sql(_MEAN)} AS mean_nni,
-    {r6_sql(safe_sqrt_sql(_VAR_NNI))} AS sdnn,
-    {r6_sql(f'SQRT({_MEAN_D2})')} AS rmssd,
-    {r6_sql(f'100.0 * SUM(CASE WHEN ABS(d) > 50 THEN 1 ELSE 0 END) / {_N}')}
-      AS pnni_50,
-    {r6_sql(_SD1)} AS sd1,
-    {r6_sql(_SD2)} AS sd2,
-    {r6_sql(f'(4*{_SD2}) / (4*{_SD1})')} AS csi
-  FROM rr GROUP BY record_id),
-b AS (
-  SELECT user_id AS record_id,
-         CAST(FLOOR(value / 7.8125) AS BIGINT) AS bin, COUNT(*) AS c
-  FROM events WHERE value > 0 AND NOT isnan(value) GROUP BY record_id, bin),
-tri AS (
-  SELECT record_id, {r6_sql('CAST(SUM(c) AS DOUBLE) / MAX(c)')}
-           AS triangular_index
-  FROM b GROUP BY record_id)
-SELECT agg.*, tri.triangular_index
-FROM agg JOIN tri USING (record_id)
-""")
-def hrv_features_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE WIDE FEATURE TABLE — the features_creator's actual
-    deliverable: every closed-form HRV family (time-domain moments,
-    Poincaré sd1/sd2, CSI, triangular index) for every record in ONE
-    model-ready row. Plan shape is the point: time-domain + Poincaré
-    + CSI are ALL aggregate expressions over the same (rri, diff)
-    pass, so they collapse into a SINGLE hash aggregate — one beat
-    scan, one exchange of map-side partials, n−1 families for free;
-    only the histogram-based triangular index needs its own two-level
-    aggregation, joined back broadcast on the tiny per-record key.
-    Representative columns per family keep the row honest (full
-    16-column time-domain detail lives in hrv_time_domain). Compare
-    the reference's one-python-pass-per-family loop."""
-    from ..features.hrv import (csi_cvi_exprs, poincare_exprs,
-                                time_domain_exprs_by_name,
-                                triangular_index, with_diff)
-    from .q_hrv import rr_from_events
-
-    def by_alias(exprs, names):
-        wanted = set(names)
-        out = [e for e in exprs
-               if e._jc.toString().rsplit(" AS ", 1)[-1].strip("`") in wanted]
-        assert len(out) == len(wanted)
-        return out
-
-    rr = with_diff(rr_from_events(spark, sf_dir), tiebreak_col="event_id")
-    agg = (rr.groupBy("record_id")
-             .agg(F.count("rri").cast("long").alias("n_beats"),
-                  *time_domain_exprs_by_name(
-                      ["mean_nni", "sdnn", "rmssd", "pnni_50"]),
-                  *by_alias(poincare_exprs(), ["sd1", "sd2"]),
-                  *by_alias(csi_cvi_exprs(), ["csi"])))
-    tri = triangular_index(rr_from_events(spark, sf_dir))
-    return agg.join(F.broadcast(tri), "record_id")
 
 
 # ---------------------------------------------------------------------------

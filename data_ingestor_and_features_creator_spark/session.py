@@ -101,13 +101,6 @@ def get_spark(app_name: str = "data_ingestor_and_features_creator_spark",
         # of this size.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
-    # GC / JVM flags for A/B experiments (round 11: the ±25% concurrent-
-    # throughput spread is G1 roulette on the shared 48 GB heap; this is
-    # how a measured flag set would ship). Only effective for the FIRST
-    # session in a process — the JVM is already up after that.
-    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

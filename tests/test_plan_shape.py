@@ -124,6 +124,23 @@ def test_sliding_hrv_lags_before_explode(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
+@pytest.mark.parametrize("name", [
+    "hrv_freq_domain", "hrv_freq_domain_sliding", "hrv_sampen",
+    "hrv_dfa", "hrv_lomb_scargle", "hrv_tinn"])
+def test_hrv_kernel_ids_scan_events_once_without_cache(name, spark, sf_dir):
+    """The Arrow-kernel ids share their input between the kernel and
+    the exact-stats branch through one reused exchange: the executed
+    plan scans events exactly once and reads no cached relation."""
+    df = QUERIES[name](spark, sf_dir)
+    df.collect()
+    final = _physical(df).split("== Final Plan ==", 1)[1]
+    final = final.split("== Initial Plan ==", 1)[0]
+    assert "InMemoryTableScan" not in final, final
+    scans = [line for line in final.splitlines()
+             if "FileScan" in line and "events" in line]
+    assert len(scans) == 1, final
+
+
 def test_rpeak_prunes_udf_input_columns(spark, sf_dir):
     """The applyInPandas stage must receive only (record_id, k, amp) —
     fan-out plumbing, not whole-row transfer."""

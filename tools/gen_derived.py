@@ -540,29 +540,30 @@ def gen_media() -> None:
     print("wrote", md)
 
 
+_FLAGS = {
+    "--media": gen_media,
+    "--sf1p": gen_sf1p,
+    "--nulls": gen_nulls,
+    "--sf10ish": gen_sf10ish,
+    "--skew": gen_skew,
+    "--sf3ish-events": gen_sf3ish_events,
+    "--sf3ish": gen_sf3ish,
+    "--sf1ish-events": gen_sf1ish_events,
+    "--sf1ish": gen_sf1ish_documents,
+    "--sf1ish-lineitem": gen_sf1ish_lineitem,
+    "--sf1ish-orders": gen_sf1ish_orders,
+}
+
+
 if __name__ == "__main__":
-    import sys as _sys
-    if "--media" in _sys.argv:
-        gen_media()
-    elif "--sf1p" in _sys.argv:
-        gen_sf1p()
-    elif "--nulls" in _sys.argv:
-        gen_nulls()
-    elif "--sf10ish" in _sys.argv:
-        gen_sf10ish()
-    elif "--skew" in _sys.argv:
-        gen_skew()
-    elif "--sf3ish-events" in _sys.argv:
-        gen_sf3ish_events()
-    elif "--sf3ish" in _sys.argv:
-        gen_sf3ish()
-    elif "--sf1ish-events" in _sys.argv:
-        gen_sf1ish_events()
-    elif "--sf1ish" in _sys.argv:
-        gen_sf1ish_documents()
-    elif "--sf1ish-lineitem" in _sys.argv:
-        gen_sf1ish_lineitem()
-    elif "--sf1ish-orders" in _sys.argv:
-        gen_sf1ish_orders()
-    else:
-        main()
+    import argparse
+    ap = argparse.ArgumentParser(
+        allow_abbrev=False,
+        description="With no flag, rewrite the CSV and blob inputs in "
+                    "testdata_derived/; a flag generates one other fixture "
+                    "instead (see each gen_* docstring).")
+    group = ap.add_mutually_exclusive_group()
+    for flag, fn in _FLAGS.items():
+        group.add_argument(flag, dest="gen", action="store_const", const=fn,
+                           default=main)
+    ap.parse_args().gen()
