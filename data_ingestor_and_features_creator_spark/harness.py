@@ -59,6 +59,16 @@ class Timing(NamedTuple):
         return min((r.seconds for r in self.reps), default=self.first.seconds)
 
 
+def release(spark: SparkSession) -> None:
+    """Unpersist every block the session pins. ``clearCache`` releases
+    only cached DataFrames; ``localCheckpoint`` blocks (connected
+    components' edge sets) stay until the JVM collects their RDD, so
+    every RDD still persisted is unpersisted too."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+
+
 def measure(spark: SparkSession, fn: QueryFn, sf_dir: str, reps: int) -> Timing:
     """One first run (JIT, codegen, page cache), then ``reps`` timed
     runs. ``Timing.best`` is the min of the reps: machine contention
@@ -66,22 +76,22 @@ def measure(spark: SparkSession, fn: QueryFn, sf_dir: str, reps: int) -> Timing:
     sliding HRV plan swung 1.1-5.7 s on consecutive quiet runs), and
     the min is the stable estimator of the plan's own cost.
 
-    Every block the id pinned is released afterwards, outside the timed
-    region, even if a run raised. Queries cache intra-query diamonds
-    and leave them pinned; across a long-lived session those caches
-    accumulated and inflated late ids 3-6x (stat_ancova 45.9 s in a
-    shared-session sweep vs 1.2 s isolated). Within one id the caches
-    stay warm across its reps. ``clearCache`` releases only cached
-    DataFrames; ``localCheckpoint`` blocks (connected components' edge
-    sets) stay until the JVM collects their RDD, so every RDD still
-    persisted is unpersisted too."""
-    try:
-        first = noop_run(spark, fn, sf_dir)
-        return Timing(first, [noop_run(spark, fn, sf_dir) for _ in range(reps)])
-    finally:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+    Every block a run pinned is released after that run, outside the
+    timed region, even if it raised. Each rep therefore pays for its
+    own caches: a rep that read the blocks the previous run filled
+    would time a cache read (while ``hrv_dfa`` cached, its reps read
+    0.8-1.0 s against a 3.6-3.8 s uncached run), and a min-of-reps
+    would reward any id that caches. Across a long-lived session leftover caches also
+    inflated late ids 3-6x (stat_ancova 45.9 s in a shared-session
+    sweep vs 1.2 s isolated)."""
+    def run() -> Run:
+        try:
+            return noop_run(spark, fn, sf_dir)
+        finally:
+            release(spark)
+
+    first = run()
+    return Timing(first, [run() for _ in range(reps)])
 
 
 def id_order(name: str) -> tuple:

@@ -312,8 +312,10 @@ FROM pk
 def signal_rpeak_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference pipeline's step 2 (raw signal → beat locations,
     SURVEY.md §3.1): adaptive-threshold R-peak detection over a sampled
-    signal, as a per-record applyInPandas kernel (operators/peaks.py —
-    see its STUB NOTICE: the signal is a deterministic stand-in, the
+    signal, threshold first — a per-record mean + 3σ aggregate,
+    broadcast back to the samples, then a per-record applyInPandas
+    refractory scan over only the samples above it (operators/peaks.py
+    — see its STUB NOTICE: the signal is a deterministic stand-in, the
     detector/plumbing are real).
 
     Fully oracle-checked: the stand-in plants beats every 70+id%30
@@ -334,7 +336,8 @@ FROM ids
 def signal_rpeak_detect_pt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full Pan–Tompkins detection chain (band-pass → derivative →
     squaring → moving-window integration → adaptive SPKI/NPKI dual
-    threshold; operators/peaks.py:101) over the same stand-in signal.
+    threshold; operators/peaks.py pan_tompkins_kernel) over the same
+    stand-in signal.
 
     Unlike the simple detector, PT's integration stage shifts peak
     positions by up to ~10 samples (filter group delay), so the

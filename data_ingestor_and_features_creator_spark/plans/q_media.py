@@ -318,8 +318,10 @@ def scan_edf_rpeaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END biosignal ingestion: real EDF container decode
     (256-byte ASCII header + signal headers + int16 sample records;
     operators/media.py edf_ecg_samples) → exploded (record, sample)
-    relation → the SAME adaptive-threshold R-peak kernel the
-    synthetic-signal path uses (operators/peaks.py detect_rpeaks).
+    relation → the SAME threshold-first R-peak plan the
+    synthetic-signal path uses (operators/peaks.py detect_rpeaks:
+    per-record threshold aggregate, broadcast filter, applyInPandas
+    refractory scan over the ~1 % of samples above the threshold).
     The fixtures plant beats every 70 + id % 30 samples over ±500
     digital noise — the identical grid contract as
     ``signal_rpeak_detect`` — so the oracle derives the full expected
@@ -394,9 +396,10 @@ def hrv_from_edf(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverges. RR values are exact multiples of 1/16 ms (7.8125 ms
     per sample), so the exact-sum contract holds with margin.
 
-    Scale shape: decode fans out per file, detection is one
-    applyInPandas per record (the natural ECG sharding unit), features
-    are one hash aggregate — the identical plan the sf-scaling
+    Scale shape: decode fans out per file, detection is a per-record
+    threshold aggregate plus one applyInPandas per record over the
+    samples above it (the natural ECG sharding unit), features are one
+    hash aggregate — the identical plan the sf-scaling
     synthetic path (`hrv_time_domain`) benchmarks at blow-up scale."""
     sig = (_assets(spark, "holter_*.edf")
            .mapInPandas(media.edf_ecg_samples(),

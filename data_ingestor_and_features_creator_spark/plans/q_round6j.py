@@ -267,14 +267,38 @@ def ml_lift_gain_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     chart), and lift vs the base rate. NTILE is deterministic under
     the (p DESC, event_id) total order and both engines share the
     same NTILE floor-division bucket sizing. Counts exact; ratios
-    identical double expressions. Scale note: the NTILE window is
-    the one global-sort construct in the family — at 100 TB swap to
-    the two-pass range-partitioned global index (data_global_index's
-    documented approach); the fixture-scale single sort is the
-    honest spelling of the same semantics."""
-    sc = _scored(spark, sf_dir)
-    wr = W.orderBy(F.desc("p"), "event_id")
-    r = sc.select("y", F.ntile(10).over(wr).alias("decile"))
+    identical double expressions. Scale: no single-task global
+    window. p lies in [0.02, 0.98] by construction, so a fixed-width
+    bin of p (1024 bins, bin 0 holding the highest scores) orders the
+    rows without sampling: per-bin counts prefix-summed into a
+    broadcast offset table, plus the row number within the bin, give
+    each row's exact global rank i (0-based; the data_global_index
+    construction, with a deterministic partition key in place of
+    sampled range bounds). NTILE(10) is closed-form from i and the
+    row count n: the first n % 10 buckets hold n div 10 + 1 rows, the
+    rest n div 10."""
+    n_bins = 1024
+    b = F.floor((F.lit(0.98) - F.col("p")) * (n_bins / 0.96)).cast("long")
+    r = _scored(spark, sf_dir).withColumn(
+        "bin", F.least(F.greatest(b, F.lit(0)), F.lit(n_bins - 1)))
+    offsets = (r.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt"))
+                .select("bin",
+                        F.coalesce(F.sum("cnt").over(
+                            W.orderBy("bin").rowsBetween(
+                                W.unboundedPreceding, -1)),
+                            F.lit(0)).alias("offset"),
+                        F.sum("cnt").over(W.rowsBetween(
+                            W.unboundedPreceding,
+                            W.unboundedFollowing)).alias("n")))
+    w_in = W.partitionBy("bin").orderBy(F.desc("p"), "event_id")
+    rank = F.col("offset") - 1 + F.row_number().over(w_in)
+    r = (r.join(F.broadcast(offsets), "bin")
+          .select("y", "n", rank.alias("i"))
+          .withColumn("decile", F.expr(
+              "CASE WHEN i < (n % 10) * (n div 10 + 1)"
+              " THEN i div (n div 10 + 1) + 1"
+              " ELSE n % 10 + (i - (n % 10) * (n div 10 + 1)) div (n div 10)"
+              " + 1 END").cast("int")))
     d = r.groupBy("decile").agg(F.count(F.lit(1)).alias("n_d"),
                                 F.sum("y").alias("pos"))
     t = d.agg(F.sum("pos").cast("double").alias("tot_pos"),

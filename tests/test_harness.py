@@ -62,6 +62,24 @@ def test_measure_releases_checkpoint_blocks(spark, sf_dir):
     assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
 
 
+def test_each_rep_starts_with_nothing_pinned(spark, sf_dir):
+    # a rep that found the previous run's blocks would time a cache read
+    pinned = []
+
+    def fn(s, d):
+        pinned.append((_cache_empty(s),
+                       len(s.sparkContext._jsc.getPersistentRDDs())))
+        base = s.range(1000).cache()
+        base.count()
+        s.range(100).localCheckpoint().count()
+        return base.selectExpr("sum(id) AS s")
+
+    harness.release(spark)
+    harness.measure(spark, fn, sf_dir, 2)
+    assert pinned == [(True, 0)] * 3
+    assert _cache_empty(spark)
+
+
 @pytest.mark.parametrize("eager", [0, 3])
 def test_build_jobs_counts_only_the_jobs_run_while_building(spark, eager):
     # each collect of a range is one job; the execution of the returned

@@ -7,10 +7,12 @@ from __future__ import annotations
 import datetime
 import hashlib
 import math
+import os
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from data_ingestor_and_features_creator_spark.features import kernels
 from data_ingestor_and_features_creator_spark.features.hrv import (
@@ -230,6 +232,104 @@ def test_rpeak_detection_finds_planted_beats(spark):
         assert rows[0]["rr_ms"] is None
         for r in rows[1:]:
             assert r["rr_ms"] == pytest.approx(period * 1000.0 / peaks.FS_HZ)
+
+
+def _kernel_beats(pdf) -> list[tuple]:
+    from data_ingestor_and_features_creator_spark.operators import peaks
+
+    return sorted((int(rid), int(i), float(ms))
+                  for rid, g in pdf.groupby("record_id")
+                  for _, i, ms in peaks.detect_rpeaks_kernel(g).itertuples(
+                      index=False))
+
+
+def test_rpeak_spark_path_matches_pandas_kernel_on_synthetic_signal(spark):
+    """detect_rpeaks thresholds with Spark's avg/stddev_pop, the pandas
+    kernel with numpy's mean/std; the two round differently, so the
+    beats are compared, not assumed."""
+    from data_ingestor_and_features_creator_spark.operators import peaks
+
+    ids = spark.range(40).withColumnRenamed("id", "record_id")
+    sig = peaks.synthetic_signal(ids)
+    got = sorted((r["record_id"], r["peak_idx"], r["peak_ms"]) for r in
+                 peaks.detect_rpeaks(sig).collect())
+    assert got == _kernel_beats(sig.toPandas())
+    assert len(got) > 40 * 10
+
+
+@pytest.mark.parametrize("pattern", ["ecg_*.edf", "holter_*.edf"])
+def test_rpeak_spark_path_matches_pandas_kernel_on_edf(spark, pattern):
+    from data_ingestor_and_features_creator_spark.operators import (media,
+                                                                    peaks)
+    from data_ingestor_and_features_creator_spark.plans import q_media
+
+    if not os.path.isdir(q_media._MEDIA):
+        pytest.skip("media fixtures not generated (tools/gen_derived.py "
+                    "--media)")
+    sig = q_media._assets(spark, pattern).mapInPandas(media.edf_ecg_samples(),
+                            schema=media.EDF_SAMPLES_SCHEMA)
+    got = sorted((r["record_id"], r["peak_idx"], r["peak_ms"]) for r in
+                 peaks.detect_rpeaks(sig).collect())
+    assert got == _kernel_beats(sig.toPandas())
+    assert {b[0] for b in got} == set(range(6))
+
+
+def test_rpeak_null_keyed_record_keeps_its_beats(spark):
+    """A record whose key is null is still one group and still gets its
+    beats (pinned from the grouped plan's output: the threshold join is
+    null-safe). Record 23's signal (period 93) is relabelled null."""
+    from data_ingestor_and_features_creator_spark.operators import peaks
+
+    ids = spark.createDataFrame([(23,), (3,)], "record_id long")
+    sig = peaks.synthetic_signal(ids).withColumn(
+        "record_id", F.when(F.col("record_id") != 23, F.col("record_id")))
+    out = (peaks.detect_rpeaks(sig)
+           .orderBy("record_id", "peak_idx").collect())
+    null_rows = [r for r in out if r["record_id"] is None]
+    assert [r["peak_idx"] for r in null_rows] == list(range(0, 1024, 93))
+    assert [r["rr_ms"] for r in null_rows] == [None] + [726.5625] * 11
+    assert [r["peak_idx"] for r in out if r["record_id"] == 3] == \
+        list(range(0, 1024, 73))
+
+
+def test_rpeak_null_key_keeps_its_own_threshold(spark):
+    """The threshold join stands a null key in for the smallest long;
+    a record with that real id must not lend the null-keyed record its
+    threshold. The null record's 0.4 bump sits below its own threshold
+    (~0.45) but above the other record's (~0.07)."""
+    from data_ingestor_and_features_creator_spark.operators import peaks
+
+    low = -2**63
+    a = np.zeros(200)
+    a[[0, 60, 120, 180]] = 1.0
+    a[90] = 0.4
+    b = np.zeros(200)
+    b[10] = 0.3
+    rows = ([(None, k, float(v)) for k, v in enumerate(a)]
+            + [(low, k, float(v)) for k, v in enumerate(b)])
+    sig = spark.createDataFrame(rows, "record_id long, k long, amp double")
+    out = peaks.detect_rpeaks(sig).collect()
+    assert sorted(r["peak_idx"] for r in out if r["record_id"] is None) == \
+        [0, 60, 120, 180]
+    assert [r["peak_idx"] for r in out if r["record_id"] == low] == [10]
+
+
+def test_rpeak_record_with_a_null_sample_emits_no_beats(spark):
+    """A null amplitude makes the record's threshold NaN, as numpy's
+    mean over pandas' NaN does in detect_rpeaks_kernel, so that record
+    emits no beats while its neighbour keeps them."""
+    from data_ingestor_and_features_creator_spark.operators import peaks
+
+    amp = np.zeros(200)
+    amp[[0, 60, 120, 180]] = 1.0
+    rows = [(rid, k, None if (rid, k) == (1, 30) else float(v))
+            for rid in (1, 2) for k, v in enumerate(amp)]
+    sig = spark.createDataFrame(rows, "record_id long, k long, amp double")
+    got = sorted((r["record_id"], r["peak_idx"])
+                 for r in peaks.detect_rpeaks(sig).collect())
+    assert got == [(2, 0), (2, 60), (2, 120), (2, 180)]
+    assert len(peaks.detect_rpeaks_kernel(
+        sig.toPandas().query("record_id == 1"))) == 0
 
 
 def test_pan_tompkins_finds_planted_beat_count_with_tolerance(spark):

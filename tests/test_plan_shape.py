@@ -6,6 +6,7 @@ broadcast, hot paths staying inside whole-stage codegen."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,21 @@ QUERIES = plans.queries()
 
 def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _seq(xs) -> list:
+    return [xs.apply(i) for i in range(xs.size())]
+
+
+def _find(node, cls: str):
+    """The first node of class ``cls`` in a physical plan, depth first."""
+    if node.getClass().getSimpleName() == cls:
+        return node
+    for c in _seq(node.children()):
+        hit = _find(c, cls)
+        if hit is not None:
+            return hit
+    return None
 
 
 def _formatted(df) -> str:
@@ -143,10 +159,29 @@ def test_hrv_kernel_ids_scan_events_once_without_cache(name, spark, sf_dir):
 
 def test_rpeak_prunes_udf_input_columns(spark, sf_dir):
     """The applyInPandas stage must receive only (record_id, k, amp) —
-    fan-out plumbing, not whole-row transfer."""
+    fan-out plumbing, not whole-row transfer — and only the samples
+    above their record's threshold: its input passes an ``amp > thr``
+    filter inside a broadcast join against the per-record threshold
+    aggregate, so the shuffle and the Python worker never see every
+    sample."""
     df = QUERIES["signal_rpeak_detect"](spark, sf_dir)
-    plan = _physical(df)
-    assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsIn" in plan
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    udf = _find(plan, "FlatMapGroupsInPandasExec")
+    assert udf is not None, plan.toString()
+    assert sorted(a.name() for a in _seq(udf.child().output())) == \
+        ["amp", "k", "record_id", "record_id"]
+    node = udf.child()
+    while node.children().size() == 1:   # sort, exchange, project
+        node = node.children().apply(0)
+    assert node.getClass().getSimpleName() == "BroadcastHashJoinExec", \
+        plan.toString()
+    assert re.search(r"\(amp#\d+ > thr#\d+\)",
+                     node.condition().get().toString())
+    built = node.right() if node.buildSide().toString() == "BuildRight" \
+        else node.left()
+    assert "stddev_pop" in built.toString()
 
 
 def test_salted_join_shuffles_on_composite_key(spark, sf_dir):
@@ -1416,6 +1451,46 @@ def test_global_window_scan_resolves_cached_subtrees(spark, sf_dir):
     finally:
         agg.unpersist()
         raw_cached.unpersist()
+
+
+def test_global_window_scan_resolves_each_cached_relation_in_place(
+        spark, sf_dir):
+    """A bounded cache bounds only its own branch. A global window over
+    cached raw rows joined to a cached aggregate must flag, as the same
+    plan uncached does; one over two cached aggregates stays exempt,
+    and so does a semi join that only filters an aggregate."""
+    from pyspark.sql import Window as W
+
+    from tools.scan_global_windows import find_unbounded_global_windows
+
+    raw = load_table(spark, sf_dir, "events").select("event_id", "user_id")
+    per_user = (raw.groupBy("user_id")
+                   .agg(F.count(F.lit(1)).alias("n")).cache())
+    per_event = (raw.groupBy("event_id")
+                    .agg(F.max("user_id").alias("u")).cache())
+    raw_cached = raw.cache()
+
+    def ranked(df):
+        return df.withColumn("r", F.row_number().over(W.orderBy("n")))
+
+    try:
+        per_user.count()
+        per_event.count()
+        raw_cached.count()
+        assert find_unbounded_global_windows(
+            ranked(raw_cached.join(per_user, "user_id"))), \
+            "cached raw rows beside a cached aggregate must flag"
+        assert find_unbounded_global_windows(ranked(
+            per_event.join(per_user, F.col("u") == F.col("user_id")))) == []
+        assert find_unbounded_global_windows(ranked(
+            per_user.join(raw_cached, "user_id", "left_semi"))) == []
+    finally:
+        per_user.unpersist()
+        per_event.unpersist()
+        raw_cached.unpersist()
+    assert find_unbounded_global_windows(ranked(
+        raw.join(raw.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
+                 "user_id")))
 
 
 def test_page_trend_has_no_global_window(spark, sf_dir):

@@ -97,6 +97,33 @@ def test_cosine_self_similarity_is_one(spark, vec):
     assert got == pytest.approx(1.0, abs=1e-6)
 
 
+@given(st.lists(st.tuples(st.integers(0, 2**32 - 1),
+                          st.integers(64, 600),
+                          st.lists(st.tuples(st.integers(0, 599),
+                                             st.sampled_from([1.0, 1.5, 2.0])),
+                                   max_size=12)),
+                min_size=1, max_size=3))
+@SETTINGS
+def test_rpeak_spark_path_matches_pandas_kernel(spark, records):
+    """Uniform noise in [0, 0.1) with planted spikes (some inside one
+    refractory window of each other): the threshold-first Spark plan
+    and the pandas kernel emit the same beats, although Spark's
+    avg/stddev_pop and numpy's mean/std round differently."""
+    from data_ingestor_and_features_creator_spark.operators import peaks
+    from tests.test_hrv_known_answers import _kernel_beats
+
+    rows = []
+    for rid, (seed, n, spikes) in enumerate(records):
+        amp = np.random.default_rng(seed).uniform(0.0, 0.1, n)
+        for pos, height in spikes:
+            amp[pos % n] = height
+        rows += [(rid, k, float(a)) for k, a in enumerate(amp)]
+    sig = spark.createDataFrame(rows, "record_id long, k long, amp double")
+    got = sorted((r["record_id"], r["peak_idx"], r["peak_ms"])
+                 for r in peaks.detect_rpeaks(sig).collect())
+    assert got == _kernel_beats(sig.toPandas())
+
+
 @given(st.text(alphabet="abc ", min_size=3, max_size=60).map(
     lambda s: " ".join(s.split()) or "a b c"))
 @SETTINGS

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Time registered query ids with the shared harness
 (data_ingestor_and_features_creator_spark/harness.py: one first run,
-then N timed reps, caches released between ids) and/or dump their
+then N timed reps, caches released after every run) and/or dump their
 formatted plans.
 
 Usage:
@@ -37,7 +37,8 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_ingestor_and_features_creator_spark import plans
-from data_ingestor_and_features_creator_spark.harness import id_order, measure
+from data_ingestor_and_features_creator_spark.harness import (
+    id_order, measure, release)
 from data_ingestor_and_features_creator_spark.session import get_spark
 
 
@@ -68,12 +69,12 @@ def main() -> int:
                 with open(os.path.join(a.plan, f"{name}_{a.suffix}.txt"),
                           "w") as fh:
                     fh.write(txt)
-                spark.catalog.clearCache()
+                release(spark)
             t = measure(spark, fn, a.sf, a.reps)
         except Exception as ex:  # noqa: BLE001
             traceback.print_exc()
             failures[name] = str(ex)[:200]
-            spark.catalog.clearCache()  # a failed plan dump leaves its pins
+            release(spark)  # a failed plan dump leaves its pins
             print(f"{name}: FAIL {failures[name]}", flush=True)
             continue
         mins[name] = round(t.best, 3)

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Scan every registered query's OPTIMIZED plan for unpartitioned
-Window nodes whose subtree lacks a cardinality-bounding boundary
-(VERDICT r8 ask 5). A `WindowExec: No Partition Defined` is by-design
-ONLY above an Aggregate/Distinct/Limit/LocalRelation — i.e. over
-vocab-bounded or constant-bounded inputs, never over raw fact rows.
+Window nodes with an input path that crosses no cardinality-bounding
+boundary (VERDICT r8 ask 5). A `WindowExec: No Partition Defined` is
+by-design ONLY above an Aggregate/Distinct/Limit/LocalRelation — i.e.
+over vocab-bounded or constant-bounded inputs, never over raw fact
+rows, not even raw rows joined to a bounded side.
 
 Prints one line per violation and a summary; exit 1 on violations.
 Usage: python tools/scan_global_windows.py [sf_dir] [ids...]
@@ -53,48 +54,51 @@ def _cls(node) -> str:
     return node.getClass().getSimpleName()
 
 
-def _walk_phys(node):
-    """Walk a SparkPlan, descending through AQE wrappers and nested
-    cache scans (both hide their subtree from .children())."""
-    yield node
-    for c in _children(node):
-        yield from _walk_phys(c)
+# Joins whose output rows are a subset of their left input's: only the
+# left path can make them unbounded.
+LEFT_ONLY_JOINS = {"LeftSemi", "LeftAnti"}
+
+
+def _inputs(node):
+    """The plans a node reads its rows from. AQE wrappers and cache
+    scans hide their subtree from .children(), so they are resolved
+    here: a cached relation, logical or physical, reads from its cached
+    plan. A semi or anti join reads rows only from its left side."""
     cls = _cls(node)
-    if cls == "AdaptiveSparkPlanExec":
-        for attr in ("executedPlan", "inputPlan"):
-            try:
-                yield from _walk_phys(getattr(node, attr)())
-                return
-            except Exception:  # noqa: BLE001 — try the next accessor
-                continue
-    elif cls.endswith("QueryStageExec"):
-        # AQE query stages (Shuffle/Broadcast/Result/TableCache…) hide
-        # their subtree behind .plan()
-        try:
-            yield from _walk_phys(node.plan())
-        except Exception:  # noqa: BLE001 — leave unresolved
-            pass
-    elif cls == "InMemoryTableScanExec":
-        try:
-            yield from _walk_phys(node.relation().cachedPlan())
-        except Exception:  # noqa: BLE001 — leave unresolved
-            pass
-
-
-def _imr_bounded(node) -> bool:
-    """True when an InMemoryRelation's CACHED plan contains a bounding
-    operator — i.e. the cache hid an Aggregate/Limit/literal subtree."""
     try:
-        phys = node.cachedPlan()
-    except Exception:  # noqa: BLE001 — unresolvable ⇒ not bounded
-        return False
-    return bool({_cls(p) for p in _walk_phys(phys)} & PHYS_BOUNDING)
+        if cls == "AdaptiveSparkPlanExec":
+            return [node.executedPlan()]
+        if cls.endswith("QueryStageExec"):
+            # AQE query stages (Shuffle/Broadcast/Result/TableCache…)
+            return [node.plan()]
+        if cls == "InMemoryTableScanExec":
+            return [node.relation().cachedPlan()]
+        if cls == "InMemoryRelation":
+            return [node.cachedPlan()]
+    except Exception:  # noqa: BLE001 — unresolvable ⇒ an unbounded leaf
+        return []
+    kids = _children(node)
+    if "Join" in cls and node.joinType().toString() in LEFT_ONLY_JOINS:
+        return kids[:1]
+    return kids
+
+
+def _bounded(node) -> bool:
+    """Every row path from this node down to a leaf crosses a bounding
+    operator. Each cached relation is resolved in place, so a bounded
+    cache bounds its own path only, never a sibling branch over raw
+    rows."""
+    if _cls(node) in BOUNDING | PHYS_BOUNDING:
+        return True
+    kids = _inputs(node)
+    return bool(kids) and all(_bounded(c) for c in kids)
 
 
 def find_unbounded_global_windows(df) -> list[str]:
     """Return one description per unpartitioned Window in df's
-    optimized logical plan whose subtree contains NO bounding node
-    (resolving cached subtrees through their InMemoryRelation)."""
+    optimized logical plan with a row path from the window down to a
+    leaf that crosses NO bounding node (resolving cached subtrees
+    through their InMemoryRelation, in place)."""
     plan = df._jdf.queryExecution().optimizedPlan()
     bad = []
     for node in _walk(plan):
@@ -102,13 +106,9 @@ def find_unbounded_global_windows(df) -> list[str]:
             continue
         if node.partitionSpec().size() > 0:
             continue
-        sub_nodes = list(_walk(node.child()))
-        subtree = {_cls(n) for n in sub_nodes}
-        if subtree & BOUNDING:
+        if _bounded(node.child()):
             continue
-        if any(_cls(n) == "InMemoryRelation" and _imr_bounded(n)
-               for n in sub_nodes):
-            continue
+        subtree = {_cls(n) for n in _walk(node.child())}
         bad.append(f"global Window over {sorted(subtree)[:8]}")
     return bad
 
